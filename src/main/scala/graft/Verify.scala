@@ -27,11 +27,11 @@ object Verify {
     // gaps between one gate's jobs with another gate's tasks. Outputs
     // are unchanged — every gate still writes its own parquet dir and
     // its result is partition-count- and schedule-independent (that is
-    // exactly what the oracle hash pins). Gates with shared mutable
-    // state serialize internally (stream gates hold a session-conf
-    // lock; Pins registration is atomic). FIFO scheduling keeps the
-    // earlier gate's tasks first, which is the back-fill behaviour we
-    // want. SPARK_GRAFT_VERIFY_THREADS=1 restores the serial walk.
+    // exactly what the oracle hash pins). Pins registration is atomic,
+    // so concurrent gates never release each other's pins. FIFO
+    // scheduling keeps the earlier gate's tasks first, which is the
+    // back-fill behaviour we want. SPARK_GRAFT_VERIFY_THREADS=1
+    // restores the serial walk.
     val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4")
       .toInt.max(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
@@ -40,7 +40,8 @@ object Verify {
     // hiccup) must not silently shrink the correctness artifact: the
     // driver enumerates result dirs, so a swallowed failure reads as a
     // dropped query, not an error
-    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val passed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val gates = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     def runGate(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
@@ -62,15 +63,28 @@ object Verify {
     }
     gates.foreach { case (name, fn) =>
       pool.submit(new Runnable {
-        override def run(): Unit = if (!runGate(name, fn, "")) failed.add(name)
+        override def run(): Unit = {
+          running.add(name)
+          try if (runGate(name, fn, "")) passed.add(name)
+          finally running.remove(name)
+        }
       })
     }
     pool.shutdown()
-    if (!pool.awaitTermination(2, java.util.concurrent.TimeUnit.HOURS))
-      System.err.println("[verify] TIMED OUT after 2 h — results below are INCOMPLETE")
-    val stillFailed = scala.jdk.CollectionConverters
-      .CollectionHasAsScala(failed).asScala.toSeq
-      .filterNot(name => runGate(name, gates(name), " (retry)"))
+    if (!pool.awaitTermination(2, java.util.concurrent.TimeUnit.HOURS)) {
+      // stop the pool BEFORE the serial retries: a retry must never
+      // race a live pool task writing the same result dir. Cancelled
+      // and never-started gates join the retry list below; a gate
+      // still running after the grace period is not retried at all.
+      pool.shutdownNow()
+      spark.sparkContext.cancelAllJobs()
+      pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
+      Files.writeString(Paths.get(s"$outDir/INCOMPLETE"),
+        s"gate pool timed out after 2 h; still running: ${running.toArray.mkString(",")}\n")
+      System.err.println("[verify] TIMED OUT after 2 h — pool stopped, artifact marked INCOMPLETE")
+    }
+    val stillFailed = gates.keys.toSeq.sorted.filterNot(passed.contains)
+      .filter(name => running.contains(name) || !runGate(name, gates(name), " (retry)"))
     if (stillFailed.nonEmpty)
       System.err.println(
         s"[verify] GATES FAILED after retry: ${stillFailed.mkString(",")} — " +

@@ -30,17 +30,6 @@ object OsInfoSource {
   val schema: StructType =
     StructType(fields.map(StructField(_, StringType)) :+ StructField("host", StringType))
 
-  /** Query the local rpm database; empty DataFrame when rpm is absent
-    * (this container has no rpm).
-    */
-  def loadPackages(
-      spark: SparkSession,
-      host: String = "localhost",
-      asOf: Double = 0.0): DataFrame = {
-    val out = Try(Seq("rpm", "-qa", "--queryformat", queryFormat).!!).getOrElse("")
-    fromQueryOutput(spark, out, host, asOf)
-  }
-
   /** The remote-extraction command of the reference's ssh path
     * (rpm.py:77-117 runs the same queryformat through a paramiko
     * channel; here it is one argv — no shell interpolation of the

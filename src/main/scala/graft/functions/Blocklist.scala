@@ -232,8 +232,6 @@ private[functions] final class AhoCorasick(patterns: IndexedSeq[String]) {
       i += 1
     }
   }
-
-  def patternCount: Int = nPatterns
 }
 
 /** One-pass blocklist stats kernel; see [[Blocklist]]. Only the

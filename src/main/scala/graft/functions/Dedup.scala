@@ -284,15 +284,15 @@ object Dedup {
       idA: String = "id_a",
       idB: String = "id_b",
       maxIter: Int = 20): DataFrame = {
-    val ss = pairs.sparkSession
-    def pin(df: DataFrame): DataFrame =
-      if (ss.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    var edges = pin(pairs
+    // LAZY pins through [[Pins]]: each pinned edge list's first action
+    // is its full-coverage fingerprint, which materializes the pin in
+    // the same job; the previous round's pin releases once the next is
+    // materialized, and the last one is registered on the result
+    var (edges, edgePins) = Pins.pin(pairs
       .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct())
+      .distinct(), eager = false)
     // One-action set fingerprint replacing the two exceptAll passes per
     // round: edge lists are distinct, so (count, XOR of pair hashes) is
     // an order-independent set identity — equal fingerprints on
@@ -321,22 +321,25 @@ object Dedup {
       // SMALL-STAR: edges now point big→small; hang u and all its
       // smaller neighbors off their minimum
       val ssMins = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val next = pin(ls.join(ssMins, "u")
+      val (next, nextPins) = Pins.pin(ls.join(ssMins, "u")
         .select(col("v"), col("m"))
         .unionByName(ssMins.select(col("u").as("v"), col("m")))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
-        .distinct())
+        .distinct(), eager = false)
       val nextSig = fingerprint(next)
       converged = nextSig == sig
       sig = nextSig
-      edges.unpersist()
+      Pins.release(edges, edgePins)
       edges = next
+      edgePins = nextPins
       i += 1
     }
-    edges.select(col("u").as("id"), col("v").as("component"))
+    val out = edges.select(col("u").as("id"), col("v").as("component"))
       .unionByName(edges.select(col("v").as("id"), col("v").as("component")))
       .distinct()
+    Pins.register(out, edgePins)
+    out
   }
 
   /** 64-bit SimHash of the word tokens: per bit, sum +1/-1 votes across

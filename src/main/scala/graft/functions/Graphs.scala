@@ -1,7 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Link-graph centrality for corpus curation.
   *
@@ -12,6 +18,23 @@ import org.apache.spark.sql.functions._
   * [[Curation]] (the reference's metrique analysis layer has no graph
   * analytics; this extends the large-scale-pipeline surface like the
   * dedup/ANN operators do).
+  *
+  * '''Round shape of the iterative operators''' ([[pageRank]],
+  * [[weightedPageRank]], [[personalizedPageRank]], [[labelPropagation]],
+  * [[kCoreRounds]], [[kCore]]): a DataFrame goes in and a DataFrame
+  * comes out, but inside, the canonicalized edges become ONE key-value
+  * vertex table `(node, adjacency)`, hash-partitioned once by
+  * `HashPartitioner(spark.sql.shuffle.partitions)` and pinned. A round
+  * is a narrow join of that table with the previous round's per-node
+  * state (both sides on the same partitioner, so no shuffle) plus one
+  * map-side-combined shuffle back onto the partitioner (label
+  * propagation: two). The rounds are therefore stages of a single
+  * Spark job — no Catalyst planning and no AQE re-planning between
+  * rounds, and no blocking job per round; only [[kCore]] runs one
+  * action per round, its fixpoint test. Integer arithmetic uses
+  * `Math.addExact`/`multiplyExact`, so an overflow fails loudly as
+  * ANSI SQL arithmetic does. [[hits]] and [[triangleCounts]] are
+  * DataFrame pipelines.
   */
 object Graphs {
 
@@ -22,9 +45,7 @@ object Graphs {
     *
     *  - the damping multiply `d · Σr < 2^63` holds while
     *    `nNodes · d < 9e18 / 10^digits` (9e18 keeps a ~2% margin under
-    *    Long.MaxValue ≈ 9.223e18 — the old `1e10` nano guard admitted
-    *    an ~8% window where near-total mass concentration could wrap
-    *    the multiply in non-ANSI mode);
+    *    Long.MaxValue ≈ 9.223e18);
     *  - the nano-rescaled OUTPUT `r · 10^(9-digits) ≤ nNodes · 1e9`
     *    must stay under 2^63 — a unit-INDEPENDENT `nNodes < 9e9` cap,
     *    which is why the ladder stops at micro: micro's damping bound
@@ -43,6 +64,189 @@ object Graphs {
 
   /** Unit-independent node cap from the nano-rescaled output bound. */
   private val MaxNodes: Long = 9000000000L
+
+  private def requireWalk(iterations: Int, dampingPerMille: Int, pinEvery: Int,
+      unit: String): Unit = {
+    require(iterations >= 1, "iterations must be >= 1")
+    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
+      s"dampingPerMille must be in [0, 1000], got $dampingPerMille")
+    require(pinEvery >= 1, "pinEvery must be >= 1")
+    require(unit == "auto" || Units.exists(_._1 == unit),
+      s"unit must be one of auto|${Units.map(_._1).mkString("|")}, got $unit")
+  }
+
+  /** The vertex-table partitioner: `spark.sql.shuffle.partitions` hash
+    * buckets of the edge frame's session.
+    */
+  private def partitioner(df: DataFrame): Partitioner =
+    new HashPartitioner(df.sparkSession.sessionState.conf.numShufflePartitions)
+
+  /** The named columns of `df` cast to BIGINT, rows with a null
+    * dropped, as an RDD — a narrow projection, so it plans no shuffle
+    * of its own.
+    */
+  private def longRows(df: DataFrame, cols: String*): RDD[Array[Long]] = {
+    val n = cols.length
+    df.select(cols.map(c => col(c).cast("long")): _*).na.drop()
+      .queryExecution.toRdd.map(r => Array.tabulate(n)(r.getLong))
+  }
+
+  /** `(node, out-neighbour -> summed weight)` for every endpoint of the
+    * weighted edges `e` (sinks get an empty table), partitioned by
+    * `part`. The map-side combine collapses duplicate edges before the
+    * shuffle.
+    */
+  private def vertexTable(e: RDD[(Long, Long, Long)], part: Partitioner)
+      : RDD[(Long, mutable.LongMap[Long])] = {
+    def add(m: mutable.LongMap[Long], v: Option[(Long, Long)]): mutable.LongMap[Long] = {
+      v.foreach { case (d, w) => m.update(d, Math.addExact(m.getOrElse(d, 0L), w)) }
+      m
+    }
+    e.flatMap { case (s, d, w) => Iterator((s, Option((d, w))), (d, None)) }
+      .combineByKey[mutable.LongMap[Long]](
+        v => add(mutable.LongMap.empty[Long], v), add,
+        (a, b) => { b.foreachEntry((d, w) => add(a, Some((d, w)))); a }, part)
+  }
+
+  /** Directed vertex table: every endpoint with its distinct
+    * out-neighbours (null endpoints dropped, duplicates collapsed).
+    */
+  private def outNeighbours(edges: DataFrame, srcCol: String, dstCol: String,
+      part: Partitioner): RDD[(Long, Array[Long])] =
+    vertexTable(longRows(edges, srcCol, dstCol).map(a => (a(0), a(1), 1L)), part)
+      .mapValues(_.keys.toArray)
+
+  /** Undirected vertex table: null rows and self loops dropped,
+    * duplicates collapsed, each edge kept in both directions — every
+    * node has at least one neighbour.
+    */
+  private def neighbours(edges: DataFrame, srcCol: String, dstCol: String,
+      part: Partitioner): RDD[(Long, Array[Long])] =
+    vertexTable(longRows(edges, srcCol, dstCol)
+      .filter(a => a(0) != a(1))
+      .flatMap(a => Iterator((a(0), a(1), 1L), (a(1), a(0), 1L))), part)
+      .mapValues(_.keys.toArray)
+
+  /** Narrow hash join of two RDDs on the same partitioner: each
+    * `(node, v)` of `left` meets `right`'s value for the node, if any.
+    * Partition i of both sides holds the same keys, so the partitions
+    * zip and one side's partition is held in a hash map — no shuffle.
+    */
+  private def localJoin[V, X](left: RDD[(Long, V)], right: RDD[(Long, X)])
+      : RDD[(Long, (V, Option[X]))] = {
+    require(left.partitioner.isDefined && left.partitioner == right.partitioner,
+      "localJoin needs both sides on the same partitioner")
+    left.zipPartitions(right, preservesPartitioning = true) { (ls, rs) =>
+      val m = mutable.LongMap.empty[X] ++= rs
+      ls.map { case (n, v) => (n, (v, m.get(n))) }
+    }
+  }
+
+  /** `reduceByKey(part, f)` with both combine sides in plain hash maps:
+    * the shuffle itself carries no aggregator, so Spark's size-tracking
+    * combine maps never sample the records, and below 200 partitions
+    * the bypass-merge writer runs. A partition's map holds its distinct
+    * keys in memory.
+    */
+  private def combine[K: ClassTag, V: ClassTag](kv: RDD[(K, V)], part: Partitioner)(
+      f: (V, V) => V): RDD[(K, V)] = {
+    def local(it: Iterator[(K, V)]): Iterator[(K, V)] = {
+      val m = mutable.HashMap.empty[K, V]
+      it.foreach { case (k, v) => m.updateWith(k)(a => Some(a.fold(v)(f(_, v)))) }
+      m.iterator
+    }
+    kv.mapPartitions(local).partitionBy(part).mapPartitions(local, preservesPartitioning = true)
+  }
+
+  /** `iterations` synchronous rounds of a fixed-point walk over the
+    * pinned vertex table `vertices`:
+    *
+    * {{{ r₀(v) = init(v),   rᵢ₊₁(v) = next(v, Σ contributions into v) }}}
+    *
+    * where a node of rank `r` sends `emit(v, r)`; a node nothing sends
+    * to reads a sum of 0. Each round is one narrow join of `vertices`
+    * with the previous round's sums plus one [[combine]] onto `part`.
+    * Every `pinEvery`-th round's sums are pinned as they are computed,
+    * so a lost block recomputes at most `pinEvery` rounds, and no round
+    * waits on a job. Returns the final `(node, rank)` RDD, not yet
+    * computed, and the pins it holds.
+    */
+  private def walk[V: ClassTag](
+      vertices: RDD[(Long, V)],
+      part: Partitioner,
+      iterations: Int,
+      pinEvery: Int,
+      init: V => Long,
+      next: (V, Long) => Long,
+      emit: (V, Long) => Iterator[(Long, Long)]): (RDD[(Long, Long)], Set[Int]) = {
+    def ranks(sums: Option[RDD[(Long, Long)]]): RDD[(Long, (V, Long))] = sums match {
+      case None => vertices.mapValues(v => (v, init(v)))
+      case Some(s) => localJoin(vertices, s)
+        .mapValues { case (v, c) => (v, next(v, c.getOrElse(0L))) }
+    }
+    var sums: Option[RDD[(Long, Long)]] = None
+    var pins = Set.empty[Int]
+    for (i <- 1 to iterations) {
+      val (s, ids) = pinRound(combine(ranks(sums).values.flatMap { case (v, r) => emit(v, r) },
+        part)(Math.addExact(_: Long, _: Long)), i, iterations, pinEvery)
+      sums = Some(s)
+      pins ++= ids
+    }
+    (ranks(sums).mapValues(_._2), pins)
+  }
+
+  /** Pin round `i`'s state when `i` is a `pinEvery`-th round before the
+    * last one (the last round's output is pinned by [[result]]).
+    */
+  private def pinRound[T](state: RDD[T], i: Int, iterations: Int,
+      pinEvery: Int): (RDD[T], Set[Int]) =
+    if (i % pinEvery == 0 && i < iterations) Pins.pinRdd(state) else (state, Set.empty)
+
+  /** Pin `values` and run the ONE job that computes it — every round
+    * still pending becomes a stage of that job — then release `held`
+    * and return `(node, <field>)` over the pinned values, with the pin
+    * registered for [[unpin]]. `node` is nullable exactly when an
+    * endpoint column of `edges` is, as the result schema has always
+    * carried it.
+    */
+  private def result(edges: DataFrame, srcCol: String, dstCol: String,
+      values: RDD[(Long, Long)], field: StructField, held: Set[Int]): DataFrame = {
+    val spark = edges.sparkSession
+    val (out, outPins) = Pins.pinRdd(values)
+    out.count()
+    Pins.release(spark.sparkContext, held)
+    val nodeNullable = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+      .schema.exists(_.nullable)
+    val df = spark.createDataFrame(out.map { case (n, x) => Row(n, x) },
+      StructType(Seq(StructField("node", LongType, nodeNullable), field)))
+    Pins.register(df, outPins)
+    df
+  }
+
+  /** The finest unit of the ladder whose damping (or weight) multiply
+    * provably fits `load`, or the forced `unit` validated against it.
+    */
+  private def unitDigits(unit: String, load: Long, tooBig: => String,
+      forcedTooBig: (String, Long) => String): Int = unit match {
+    case "auto" =>
+      val found = Units.collectFirst { case (_, dg) if load < unitBound(dg) => dg }
+      require(found.isDefined, tooBig)
+      found.get
+    case name =>
+      val dg = Units.find(_._1 == name).get._2
+      require(load < unitBound(dg), forcedTooBig(name, unitBound(dg)))
+      dg
+  }
+
+  /** Final ranks in the selected unit, rescaled to nano (exact integer
+    * multiply by `10^(9-digits)`) so the output schema is unit-agnostic.
+    */
+  private def rankResult(edges: DataFrame, srcCol: String, dstCol: String,
+      ranks: RDD[(Long, Long)], digits: Int, held: Set[Int]): DataFrame = {
+    val toNano = math.pow(10, 9 - digits).toLong
+    result(edges, srcCol, dstCol, ranks.mapValues(Math.multiplyExact(_, toNano)),
+      StructField("rank_nano", LongType), held)
+  }
 
   /** Fixed-iteration PageRank in integer fixed-point units —
     * bit-identical across engines, so the gate oracle replays it
@@ -76,16 +280,11 @@ object Graphs {
     * `"nano"|"micro"` is validated against the same bounds and fails
     * loud.
     *
-    * Scale shape: the edge table (+ out-degree) is computed once,
-    * pre-partitioned ON THE JOIN KEY `src` and pinned, so each of the
-    * `iterations` rounds is one co-partitioned join (ranks shuffle 16
-    * bytes/row onto the same hash partitioning every round — AQE
-    * reuses it) + one `dst` aggregation; ranks pin every `pinEvery`
-    * rounds through the shared [[Pins]] tracker (eager checkpoint —
-    * reliable when a checkpoint dir is set) so lineage stays bounded
-    * while the walk is not serialized on a materialization barrier
-    * per round, and the previously pinned round releases. No
-    * driver-side state beyond the loop counter.
+    * Jobs: one setup job builds and pins the vertex table
+    * `(node, out-neighbours)` and counts its nodes for the unit
+    * choice; one more runs all `iterations` rounds (one shuffle each,
+    * see [[Graphs]]) and pins the result. `pinEvery` bounds how far
+    * back a lost block recomputes; it adds no job.
     *
     * @return `(node bigint, rank_nano bigint)` — one row per distinct
     *         endpoint of `edges`.
@@ -97,151 +296,27 @@ object Graphs {
       iterations: Int,
       dampingPerMille: Int = 850,
       pinEvery: Int = 1,
-      unit: String = "auto"): DataFrame =
-    pageRank(edges, srcCol, dstCol, iterations, dampingPerMille, pinEvery,
-      unit, fuseZero = false)
-
-  /** Probe-visible overload: `fuseZero = true` swaps the per-round
-    * union-zero branch (a separate map stage scanning the node pin
-    * each round) for a REP-EDGE fusion — the join goes right-outer
-    * over ranks, each node's zero presence row is emitted from its
-    * single representative out-edge (`rep` = the min-dst edge, marked
-    * once at setup) or from the null-padded row of a dangling node,
-    * via one conditional-array explode. Same rows into the aggregate
-    * (every node exactly one zero row + its in-contributions), so the
-    * integer sums are identical; one fewer stage per round. Measured
-    * A/B lives in GraphProbe `pr_ab` (r15, verdict #7); the production
-    * default is whichever shape measured faster (see
-    * OPTIMIZATION_r15.md).
-    */
-  private[graft] def pageRank(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iterations: Int,
-      dampingPerMille: Int,
-      pinEvery: Int,
-      unit: String,
-      fuseZero: Boolean): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      s"dampingPerMille must be in [0, 1000], got $dampingPerMille")
-    require(pinEvery >= 1, "pinEvery must be >= 1")
-    require(unit == "auto" || Units.exists(_._1 == unit),
-      s"unit must be one of auto|${Units.map(_._1).mkString("|")}, got $unit")
-
-    // LAZY setup pins: the nNodes count below materializes nodes AND
-    // (through its lineage) the cached edge table in ONE job; eDeg
-    // fuses into round 1's rank pin. Saves the 3 separate eager
-    // materialization barriers the old setup paid before round 1.
-    val (e, ePins) = Pins.pin(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src")), eager = false)
-    // fused shape only: min(dst) marks ONE representative edge per src
-    // (edges are distinct, so the flag is unique) — the zero presence
-    // row is emitted from it instead of a union branch. The default
-    // shape carries no extra column (the rep byte would ride the pin
-    // cache every round for nothing).
-    val outdeg =
-      if (fuseZero) e.groupBy("src")
-        .agg(count(lit(1)).as("deg"), min(col("dst")).as("_mindst"))
-      else e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // (src, dst, deg[, rep]) co-partitioned on src — the per-round join probe
-    val eDegPlan =
-      if (fuseZero) e.join(outdeg, "src")
-        .select(col("src"), col("dst"), col("deg"),
-          (col("dst") === col("_mindst")).as("rep"))
-      else e.join(outdeg, "src")
-    val (eDeg, eDegPins) = Pins.pin(eDegPlan.repartition(col("src")),
-      eager = false)
-    val (nodes, nodePins) = Pins.pin(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct(), eager = false)
-
-    val nNodes = nodes.count()
+      unit: String = "auto"): DataFrame = {
+    requireWalk(iterations, dampingPerMille, pinEvery, unit)
+    val part = partitioner(edges)
+    val (adj, adjPins) = Pins.pinRdd(outNeighbours(edges, srcCol, dstCol, part))
+    val nNodes = adj.count()
     require(nNodes < MaxNodes,
       s"pageRank: $nNodes nodes exceed the ~9e9 cap from the rank_nano " +
         "output bound (rank * 1e9 must stay under 2^63)")
-    val load = nNodes * math.max(dampingPerMille, 1).toLong
-    val digits = unit match {
-      case "auto" =>
-        // the micro damping bound (9e12 node·damping) is implied by the
-        // MaxNodes cap at d <= 1000, so auto always finds a unit here
-        Units.collectFirst { case (_, dg) if load < unitBound(dg) => dg }.get
-      case name =>
-        val dg = Units.find(_._1 == name).get._2
-        require(load < unitBound(dg),
-          s"pageRank: $nNodes nodes would overflow the $name-unit damping " +
-            s"multiply (bound ${unitBound(dg)} node·damping) — use unit=\"auto\"")
-        dg
-    }
+    // the micro damping bound (9e12 node·damping) is implied by the
+    // MaxNodes cap at d <= 1000, so auto always finds a unit here
+    val digits = unitDigits(unit, nNodes * math.max(dampingPerMille, 1).toLong, "",
+      (name, bound) => s"pageRank: $nNodes nodes would overflow the $name-unit " +
+        s"damping multiply (bound $bound node·damping) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
-    val base = lit((1000L - dampingPerMille) * (u / 1000L))
-    // rounds chain lazily between pins; every `pinEvery`-th (plus the
-    // final) round pins eagerly. Default 1 — A/B'd at the gate graph
-    // (8 rounds, sf0.1, 5-10 run sets): per-round pins floor at
-    // 4.4-5.3 s; pinEvery=3 and pinEvery=8 both sit ~7 s (the deeper
-    // multi-join AQE plans lose more than the saved barriers gain).
-    // The residual cost is scheduler/bookkeeping per round — an
-    // iterative distributed walk's floor, not data volume (the same
-    // 8 rounds dominate at any graph size that actually needs Spark).
-    var ranks = nodes.withColumn("r", lit(u))
-    var rankPins = Set.empty[Int]
-    var i = 0
-    while (i < iterations) {
-      // one join + ONE aggregation per round: instead of aggregating
-      // contributions and left-joining the node set back (a second
-      // join), every node contributes a zero row to the same agg — the
-      // integer sum is unchanged and no-in-edge nodes still surface.
-      // `fuseZero` emits that zero row from the join itself (rep edge /
-      // dangling null-pad) instead of a union branch over the node pin.
-      val rows =
-        if (fuseZero) {
-          val zeroRow = struct(col("node").as("n"), lit(0L).as("c"))
-          val contribRow = struct(col("dst").as("n"), expr("r div deg").as("c"))
-          eDeg.join(ranks, eDeg("src") === ranks("node"), "right_outer")
-            .select(explode(
-              when(col("src").isNull, array(zeroRow))
-                .when(col("rep"), array(contribRow, zeroRow))
-                .otherwise(array(contribRow))).as("x"))
-            .select(col("x.n").as("node"), col("x.c").as("c"))
-        } else {
-          eDeg.join(ranks, eDeg("src") === ranks("node"))
-            .select(col("dst").as("node"), expr("r div deg").as("c"))
-            .unionByName(nodes.select(col("node"), lit(0L).as("c")))
-        }
-      val next = rows
-        .groupBy("node")
-        .agg(sum(col("c")).as("c"))
-        .select(col("node"),
-          (base + expr(s"($dampingPerMille * c) div 1000"))
-            .cast("long").as("r"))
-      i += 1
-      if (i % pinEvery == 0 || i == iterations) {
-        val (pinned, nextPins) = Pins.pin(next)
-        Pins.release(ranks, rankPins)
-        ranks = pinned
-        rankPins = nextPins
-      } else {
-        ranks = next
-      }
-    }
-    // every pin is EAGER, so the final ranks no longer read the graph
-    // pins — release them here rather than leaking session-lifetime
-    // cache (the dsirWeights-pin lesson): only the result's pins
-    // survive, registered so `Graphs.unpin(result)` frees them too
-    Pins.release(e, ePins)
-    Pins.release(eDeg, eDegPins)
-    Pins.release(nodes, nodePins)
-    // rescale the selected unit back to nano (exact: integer multiply
-    // by 10^(9-digits)) so the output schema is unit-agnostic
-    val toNano = math.pow(10, 9 - digits).toLong
-    val out = ranks.select(col("node"),
-      (col("r") * lit(toNano)).cast("long").as("rank_nano"))
-    Pins.register(out, rankPins)
-    out
+    val d = dampingPerMille.toLong
+    val base = (1000L - d) * (u / 1000L)
+    val (ranks, pins) = walk[Array[Long]](adj, part, iterations, pinEvery,
+      init = _ => u,
+      next = (_, c) => Math.addExact(base, Math.multiplyExact(d, c) / 1000L),
+      emit = (out, r) => out.iterator.map(t => (t, r / out.length)))
+    rankResult(edges, srcCol, dstCol, ranks, digits, adjPins ++ pins)
   }
 
   /** Release the cached blocks behind a [[pageRank]] result; no-op
@@ -260,16 +335,15 @@ object Graphs {
     * non-increasing exactly as in the unweighted walk, so the same
     * unit-ladder argument holds with one extra multiply to guard:
     * `r · w < 2^63` needs `nNodes · maxW < 9e18 / U`, so the auto
-    * unit selects on `nNodes · max(dampingPerMille, maxW)` (one
-    * bounded min/max aggregate, which also rejects weights < 1 loud —
-    * a zero or negative weight is a caller bug, not a silent drop).
-    * Parallel edges merge by SUMMING weights (the natural
+    * unit selects on `nNodes · max(dampingPerMille, maxW)` (the setup
+    * job's node count and weight range, which also rejects weights
+    * < 1 loud — a zero or negative weight is a caller bug, not a
+    * silent drop). Parallel edges merge by SUMMING weights (the natural
     * multiplicity semantics the unweighted walk's `distinct`
     * deliberately discards); null endpoints/weights drop.
     *
-    * Scale shape identical to [[pageRank]]: `(src, dst, w, W)`
-    * pre-partitioned on the join key and pinned, one co-partitioned
-    * join + one aggregation per round, 16-byte rank rows.
+    * Job shape identical to [[pageRank]], over a vertex table
+    * `(node, out-neighbours, weights, W)`.
     */
   def weightedPageRank(
       edges: DataFrame,
@@ -280,85 +354,42 @@ object Graphs {
       dampingPerMille: Int = 850,
       pinEvery: Int = 1,
       unit: String = "auto"): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      s"dampingPerMille must be in [0, 1000], got $dampingPerMille")
-    require(pinEvery >= 1, "pinEvery must be >= 1")
-    require(unit == "auto" || Units.exists(_._1 == unit),
-      s"unit must be one of auto|${Units.map(_._1).mkString("|")}, got $unit")
-
-    // LAZY setup pins — same fusion as pageRank's setup
-    val (e, ePins) = Pins.pin(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .repartition(col("src")), eager = false)
-    val wsum = e.groupBy("src").agg(sum(col("w")).as("ws"))
-    val (eW, eWPins) = Pins.pin(e.join(wsum, "src").repartition(col("src")),
-      eager = false)
-    val (nodes, nodePins) = Pins.pin(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct(), eager = false)
-
-    val nNodes = nodes.count()
+    requireWalk(iterations, dampingPerMille, pinEvery, unit)
+    val part = partitioner(edges)
+    val (adj, adjPins) = Pins.pinRdd(
+      vertexTable(longRows(edges, srcCol, dstCol, weightCol).map(a => (a(0), a(1), a(2))), part)
+        .mapValues { m =>
+          val (out, ws) = m.toArray.unzip
+          (out, ws, ws.foldLeft(0L)(Math.addExact(_: Long, _: Long)))
+        })
+    // (nodes, merged edges, min weight, max weight) in the setup job
+    val (nNodes, nEdges, minW, maxW) = adj.values.aggregate((0L, 0L, Long.MaxValue, Long.MinValue))(
+      { case ((n, m, lo, hi), (_, ws, _)) =>
+        (n + 1, m + ws.length, math.min(lo, ws.minOption.getOrElse(lo)),
+          math.max(hi, ws.maxOption.getOrElse(hi))) },
+      { case ((n1, m1, lo1, hi1), (n2, m2, lo2, hi2)) =>
+        (n1 + n2, m1 + m2, math.min(lo1, lo2), math.max(hi1, hi2)) })
     require(nNodes < MaxNodes,
       s"weightedPageRank: $nNodes nodes exceed the ~9e9 cap from the " +
         "rank_nano output bound")
-    val wStats = e.agg(min(col("w")).as("mn"), max(col("w")).as("mx")).head()
-    require(!wStats.isNullAt(0) && wStats.getLong(0) >= 1L,
+    require(nEdges > 0 && minW >= 1L,
       s"weightedPageRank: weights must be >= 1 (got min ${
-        if (wStats.isNullAt(0)) "none" else wStats.getLong(0).toString})")
-    val maxW = wStats.getLong(1)
+        if (nEdges == 0) "none" else minW.toString})")
     val load = nNodes * math.max(math.max(dampingPerMille, 1).toLong, maxW)
-    val digits = unit match {
-      case "auto" =>
-        val found = Units.collectFirst { case (_, dg) if load < unitBound(dg) => dg }
-        require(found.isDefined,
-          s"weightedPageRank: $nNodes nodes x max weight $maxW overflow even " +
-            s"the micro unit (bound ${unitBound(6)} node·weight) — rescale weights")
-        found.get
-      case name =>
-        val dg = Units.find(_._1 == name).get._2
-        require(load < unitBound(dg),
-          s"weightedPageRank: $nNodes nodes x max weight $maxW would overflow " +
-            s"the $name unit (bound ${unitBound(dg)}) — use unit=\"auto\"")
-        dg
-    }
+    val digits = unitDigits(unit, load,
+      s"weightedPageRank: $nNodes nodes x max weight $maxW overflow even " +
+        s"the micro unit (bound ${unitBound(6)} node·weight) — rescale weights",
+      (name, bound) => s"weightedPageRank: $nNodes nodes x max weight $maxW would " +
+        s"overflow the $name unit (bound $bound) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
-    val base = lit((1000L - dampingPerMille) * (u / 1000L))
-    var ranks = nodes.withColumn("r", lit(u))
-    var rankPins = Set.empty[Int]
-    var i = 0
-    while (i < iterations) {
-      val contrib = eW
-        .join(ranks, eW("src") === ranks("node"))
-        .select(col("dst").as("node"), expr("(r * w) div ws").as("c"))
-      val next = contrib
-        .unionByName(nodes.select(col("node"), lit(0L).as("c")))
-        .groupBy("node")
-        .agg(sum(col("c")).as("c"))
-        .select(col("node"),
-          (base + expr(s"($dampingPerMille * c) div 1000"))
-            .cast("long").as("r"))
-      i += 1
-      if (i % pinEvery == 0 || i == iterations) {
-        val (pinned, nextPins) = Pins.pin(next)
-        Pins.release(ranks, rankPins)
-        ranks = pinned
-        rankPins = nextPins
-      } else {
-        ranks = next
-      }
-    }
-    Pins.release(e, ePins)
-    Pins.release(eW, eWPins)
-    Pins.release(nodes, nodePins)
-    val toNano = math.pow(10, 9 - digits).toLong
-    val out = ranks.select(col("node"),
-      (col("r") * lit(toNano)).cast("long").as("rank_nano"))
-    Pins.register(out, rankPins)
-    out
+    val d = dampingPerMille.toLong
+    val base = (1000L - d) * (u / 1000L)
+    val (ranks, pins) = walk[(Array[Long], Array[Long], Long)](adj, part, iterations, pinEvery,
+      init = _ => u,
+      next = (_, c) => Math.addExact(base, Math.multiplyExact(d, c) / 1000L),
+      emit = { case ((out, ws, total), r) =>
+        out.indices.iterator.map(j => (out(j), Math.multiplyExact(r, ws(j)) / total)) })
+    rankResult(edges, srcCol, dstCol, ranks, digits, adjPins ++ pins)
   }
 
   /** Personalized PageRank — [[pageRank]] with the teleport mass
@@ -385,13 +416,11 @@ object Graphs {
     * reported — the zero is a signal: no link path from the trusted
     * core within `iterations` hops).
     *
-    * Scale shape adds one structural win over the global walk: the
-    * rank side of the per-round contribution join filters `r != 0`
-    * first, so early rounds join only the reached FRONTIER (seeds,
-    * then their k-hop neighborhood) instead of every node —
-    * integer-exact (a zero rank contributes zero) and exactly what
-    * makes seeded walks cheap on web-scale graphs. Pins cadence and
-    * co-partitioning mirror [[pageRank]].
+    * Only nodes with a non-zero rank send contributions, so early
+    * rounds shuffle only the reached FRONTIER (seeds, then their k-hop
+    * neighborhood) — integer-exact (a zero rank contributes zero) and
+    * what makes seeded walks cheap on web-scale graphs. The seed flag
+    * rides the vertex table; the job shape is [[pageRank]]'s.
     *
     * @param seeds frame whose `seedCol` holds the seed node ids;
     *              ids not present in the graph are ignored.
@@ -408,92 +437,30 @@ object Graphs {
       dampingPerMille: Int = 850,
       pinEvery: Int = 1,
       unit: String = "auto"): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      s"dampingPerMille must be in [0, 1000], got $dampingPerMille")
-    require(pinEvery >= 1, "pinEvery must be >= 1")
-    require(unit == "auto" || Units.exists(_._1 == unit),
-      s"unit must be one of auto|${Units.map(_._1).mkString("|")}, got $unit")
-
-    // LAZY setup pins — same fusion as pageRank's setup (the nSeeds
-    // count below is the materializing action)
-    val (e, ePins) = Pins.pin(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src")), eager = false)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val (eDeg, eDegPins) = Pins.pin(e.join(outdeg, "src").repartition(col("src")),
-      eager = false)
-    val seedIds = seeds
-      .select(col(seedCol).cast("long").as("node")).filter(col("node").isNotNull)
-      .distinct()
-    val (nodes, nodePins) = Pins.pin(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .join(seedIds.withColumn("_s", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_s"), lit(false)).as("is_seed")),
-      eager = false)
-
+    requireWalk(iterations, dampingPerMille, pinEvery, unit)
+    val part = partitioner(edges)
+    val seedIds = combine(longRows(seeds, seedCol).map(a => (a(0), ())), part)((a, _) => a)
+    val (adj, adjPins) = Pins.pinRdd(localJoin(outNeighbours(edges, srcCol, dstCol, part), seedIds)
+      .mapValues { case (out, s) => (out, s.isDefined) })
     // the ladder bounds scale with SEED mass, not graph size
-    val nSeeds = nodes.filter(col("is_seed")).count()
+    val nSeeds = adj.filter(_._2._2).count()
     require(nSeeds >= 1, "personalizedPageRank: no seed id occurs in the graph")
     require(nSeeds < MaxNodes,
       s"personalizedPageRank: $nSeeds seeds exceed the ~9e9 cap from the " +
         "rank_nano output bound (rank * 1e9 must stay under 2^63)")
-    val load = nSeeds * math.max(dampingPerMille, 1).toLong
-    val digits = unit match {
-      case "auto" =>
-        Units.collectFirst { case (_, dg) if load < unitBound(dg) => dg }.get
-      case name =>
-        val dg = Units.find(_._1 == name).get._2
-        require(load < unitBound(dg),
-          s"personalizedPageRank: $nSeeds seeds would overflow the $name-unit " +
-            s"damping multiply (bound ${unitBound(dg)} seed·damping) — use unit=\"auto\"")
-        dg
-    }
+    val digits = unitDigits(unit, nSeeds * math.max(dampingPerMille, 1).toLong, "",
+      (name, bound) => s"personalizedPageRank: $nSeeds seeds would overflow the " +
+        s"$name-unit damping multiply (bound $bound seed·damping) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
-    val baseSeed = lit((1000L - dampingPerMille) * (u / 1000L))
-    var ranks = nodes.select(col("node"),
-      when(col("is_seed"), lit(u)).otherwise(lit(0L)).as("r"))
-    var rankPins = Set.empty[Int]
-    var i = 0
-    while (i < iterations) {
-      // frontier-limited: zero ranks contribute zero — drop them
-      // BEFORE the join so round cost tracks the reached set
-      val contrib = eDeg
-        .join(ranks.filter(col("r") =!= 0), eDeg("src") === col("node"))
-        .select(col("dst").as("node"), expr("r div deg").as("c"),
-          lit(false).as("is_seed"))
-      // the union-zero rows carry the REAL seed flag (contrib rows
-      // false), so max(is_seed) restores per-node membership in the
-      // same aggregate — no second nodes join per round
-      val next = contrib
-        .unionByName(nodes.select(col("node"), lit(0L).as("c"), col("is_seed")))
-        .groupBy("node")
-        .agg(sum(col("c")).as("c"), max(col("is_seed")).as("is_seed"))
-        .select(col("node"),
-          (when(col("is_seed"), baseSeed).otherwise(lit(0L)) +
-            expr(s"($dampingPerMille * c) div 1000"))
-            .cast("long").as("r"))
-      i += 1
-      if (i % pinEvery == 0 || i == iterations) {
-        val (pinned, nextPins) = Pins.pin(next)
-        Pins.release(ranks, rankPins)
-        ranks = pinned
-        rankPins = nextPins
-      } else {
-        ranks = next
-      }
-    }
-    Pins.release(e, ePins)
-    Pins.release(eDeg, eDegPins)
-    Pins.release(nodes, nodePins)
-    val toNano = math.pow(10, 9 - digits).toLong
-    val out = ranks.select(col("node"),
-      (col("r") * lit(toNano)).cast("long").as("rank_nano"))
-    Pins.register(out, rankPins)
-    out
+    val d = dampingPerMille.toLong
+    val baseSeed = (1000L - d) * (u / 1000L)
+    val (ranks, pins) = walk[(Array[Long], Boolean)](adj, part, iterations, pinEvery,
+      init = v => if (v._2) u else 0L,
+      next = (v, c) => Math.addExact(if (v._2) baseSeed else 0L,
+        Math.multiplyExact(d, c) / 1000L),
+      emit = { case ((out, _), r) =>
+        if (r == 0L) Iterator.empty else out.iterator.map(t => (t, r / out.length)) })
+    rankResult(edges, srcCol, dstCol, ranks, digits, adjPins ++ pins)
   }
 
   /** Fixed-round k-core peeling over an undirected edge table —
@@ -509,10 +476,13 @@ object Graphs {
     * peel to the true fixpoint.
     *
     * Input is canonicalized like [[labelPropagation]] (nulls/self
-    * loops dropped, duplicates collapsed, symmetrized). Each round is
-    * one degree aggregation + one semi-join back onto the edge table
-    * (both sides partitioned on the same key); the edge frame pins
-    * per round and the previous pin releases.
+    * loops dropped, duplicates collapsed, symmetrized). The vertex
+    * table carries each node's neighbours and its degree in the
+    * surviving subgraph. In a round, each removed node sends one
+    * message to each of its neighbours (one shuffle), and the
+    * survivors subtract what they received in a narrow join; a node
+    * left without neighbours drops out. All `rounds` rounds run in
+    * one job.
     *
     * @return `(node, degree)` for nodes surviving all rounds, with
     *         degree measured IN the surviving subgraph. A node whose
@@ -528,10 +498,11 @@ object Graphs {
       rounds: Int): DataFrame =
     kCorePeel(edges, srcCol, dstCol, k, Some(rounds))
 
-  /** Exact k-core: [[kCoreRounds]] run to the fixpoint. The driver
-    * checks a 16-byte count per round (strictly decreasing, so the
-    * loop terminates in at most |V| rounds; real graphs settle in a
-    * handful) — no row data is collected.
+  /** Exact k-core: [[kCoreRounds]] run to the fixpoint. One job per
+    * round counts the nodes the next round would remove (it also
+    * computes and pins the round); a round that would remove none
+    * ends the loop, so it terminates in at most |V| rounds and real
+    * graphs settle in a handful — no row data is collected.
     */
   def kCore(
       edges: DataFrame,
@@ -548,39 +519,33 @@ object Graphs {
       rounds: Option[Int]): DataFrame = {
     require(k >= 1, "k must be >= 1")
     rounds.foreach(r => require(r >= 1, "rounds must be >= 1"))
-    val half = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-    // LAZY pins throughout the peel: every pinned frame's first action
-    // is the full-coverage count right below it, so materialization
-    // fuses into the count job — 1 job per round instead of 2
-    var (e, ePins) = Pins.pin(half
-      .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src")), eager = false)
-    var edgeCount = e.count()
-    var done = false
+    val part = partitioner(edges)
+    // (node, (neighbours, degree in the surviving subgraph))
+    var (core, pins) = Pins.pinRdd(
+      neighbours(edges, srcCol, dstCol, part).mapValues(a => (a, a.length.toLong)))
+    def doomed(c: RDD[(Long, (Array[Long], Long))]): Long = c.filter(_._2._2 < k).count()
     var round = 0
-    while (!done && edgeCount > 0L) {
-      val deg = e.groupBy("src").agg(count(lit(1)).as("degree"))
-      val keep = deg.filter(col("degree") >= k).select(col("src").as("_keep"))
-      val (next, nextPins) = Pins.pin(e
-        .join(keep, e("src") === keep("_keep"), "left_semi")
-        .join(keep.withColumnRenamed("_keep", "_keep2"),
-          e("dst") === col("_keep2"), "left_semi")
-        .repartition(col("src")), eager = false)
-      val nextCount = next.count()
+    var more = rounds.isDefined || doomed(core) > 0
+    while (more) {
+      val lost = combine(core.values.flatMap { case (out, deg) =>
+        if (deg < k) out.iterator.map(t => (t, 1L)) else Iterator.empty }, part)(_ + _)
+      val (next, nextPins) = Pins.pinRdd(localJoin(core.filter(_._2._2 >= k), lost)
+        .mapValues { case ((out, deg), l) => (out, deg - l.getOrElse(0L)) }
+        .filter(_._2._2 > 0))
       round += 1
-      Pins.release(e, ePins)
-      e = next
-      ePins = nextPins
-      done = rounds.map(round >= _).getOrElse(nextCount == edgeCount)
-      edgeCount = nextCount
+      more = rounds match {
+        case Some(r) => round < r
+        case None => doomed(next) > 0
+      }
+      // to the fixpoint, `next` is computed and pinned by now, so the
+      // previous round's pin can go; fixed rounds hold every pin until
+      // the result job
+      if (rounds.isEmpty) Pins.release(edges.sparkSession.sparkContext, pins)
+      pins = if (rounds.isEmpty) nextPins else pins ++ nextPins
+      core = next
     }
-    val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-    Pins.register(out, ePins)
-    out
+    result(edges, srcCol, dstCol, core.mapValues(_._2),
+      StructField("degree", LongType, nullable = false), pins)
   }
 
   /** Deterministic synchronous label propagation — community
@@ -613,15 +578,15 @@ object Graphs {
     * Input edges are canonicalized: null/self-loop rows dropped,
     * duplicates collapsed, and each edge voted in BOTH directions
     * (pass a directed table and it is treated as its undirected
-    * support). Scale shape mirrors [[pageRank]]: the symmetrized edge
-    * table is pre-partitioned on the join key `src` and pinned, each
-    * round is one co-partitioned join + a two-level aggregation —
-    * `(node, label)` counts (map-side combinable) then a per-node
-    * `max(struct(count, -label))` argmax, 24-byte rows in both
-    * exchanges, no driver state; labels pin every `pinEvery` rounds
-    * through [[Pins]] and the previous pin releases. Labels never
-    * grow (they are node ids), so there is no overflow ladder to
-    * manage — this runs at any node count.
+    * support). Each round joins the vertex table with the previous
+    * labels and aggregates the votes in two map-side-combined
+    * shuffles: counts keyed `(node, label)`, then the per-node argmax
+    * keyed `node`. The first level keeps the shape skew-safe: a hub's
+    * degree-many distinct votes spread over reducers by label before
+    * one row per (node, label) reaches the node's reducer. All rounds
+    * run in one job; `pinEvery` is [[pageRank]]'s. Labels never grow
+    * (they are node ids), so there is no overflow ladder to manage —
+    * this runs at any node count.
     *
     * @return `(node bigint, label bigint)` — one row per distinct
     *         endpoint; `label` is the community representative's id.
@@ -631,101 +596,29 @@ object Graphs {
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      pinEvery: Int = 1): DataFrame =
-    labelPropagation(edges, srcCol, dstCol, iterations, pinEvery,
-      voteShape = "combine")
-
-  /** Probe-visible overload: `voteShape` selects the per-round vote
-    * aggregation physical shape (identical results, measured A/B in
-    * GraphProbe — r15 adjudication of the r14 single-exchange rewrite):
-    *
-    *  - `"combine"`: `groupBy(node,label)` count → `groupBy(node)`
-    *    argmax — 2 aggregate exchanges, BOTH map-side combinable. The
-    *    production choice: the r14 driver bench showed the raw shape
-    *    slower (+32%/+43% in both samples), and on converged or
-    *    hub-skewed graphs raw votes concentrate an uncombined
-    *    edge-scale row stream on single reducers (guide §2.5) while
-    *    this shape ships at most one row per (node, distinct label)
-    *    after the map-side partial.
-    *  - `"raw"`: the r14 shape — `repartition(node)` once, then both
-    *    aggregation levels satisfy the distribution in place: 1
-    *    exchange carrying RAW votes (no map-side combine).
-    *  - `"mode"`: one `groupBy(node).agg(mode(label, true))` — one
-    *    exchange AND map-side reduction (the typed-imperative mode
-    *    keeps a per-group label-count map; deterministic ties = lowest
-    *    label, identical to the argmax order), but the aggregate runs
-    *    outside whole-stage codegen; measured in GraphProbe before
-    *    choosing the production default.
-    */
-  private[graft] def labelPropagation(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iterations: Int,
-      pinEvery: Int,
-      voteShape: String): DataFrame = {
+      pinEvery: Int = 1): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(pinEvery >= 1, "pinEvery must be >= 1")
-    require(Set("combine", "raw", "mode")(voteShape),
-      s"voteShape must be combine|raw|mode, got $voteShape")
-    val half = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-    // LAZY pin: round 1's rank pin is the first action over the
-    // symmetrized edges and covers every partition — the edge cache
-    // fills inside that job instead of a separate setup barrier
-    val (e, ePins) = Pins.pin(half
-      .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src")), eager = false)
-    // every endpoint appears as src after symmetrization, so the node
-    // set needs no second union — and every node has >= 1 neighbor,
-    // so the per-round vote join never drops a node
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    var labelPins = Set.empty[Int]
-    var i = 0
-    while (i < iterations) {
-      val votes = e.join(labels, e("src") === labels("node"))
-        .select(col("dst").as("node"), col("label"))
-      // vote count then argmax by (count desc, label asc) — the argmax
-      // is ONE map-side-combinable aggregate: lexicographic max of
-      // (c, -label), no window, no per-node sort. The "raw" variant
-      // trades the count level's exchange away by repartitioning raw
-      // votes once; the "mode" variant gets one exchange AND map-side
-      // reduction from the typed-imperative mode aggregate
-      // (deterministic=true ties to the LOWEST label — exactly this
-      // argmax's (count desc, label asc) order) at the price of
-      // leaving whole-stage codegen (ObjectHashAggregate with a
-      // per-group counting map). See the voteShape scaladoc for why
-      // "combine" is the production shape.
-      val next = voteShape match {
-        case "mode" =>
-          votes.groupBy("node")
-            .agg(expr("mode(label, true)").as("label"))
-        case shape =>
-          val counted = (shape match {
-            case "raw" => votes.repartition(col("node"))
-            case _ => votes
-          }).groupBy("node", "label").agg(count(lit(1)).as("c"))
-          counted.groupBy("node")
-            .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-            .select(col("node"), (-col("m.nl")).as("label"))
+    val part = partitioner(edges)
+    // every node has >= 1 neighbour, so every node gets a vote each round
+    val (adj, adjPins) = Pins.pinRdd(neighbours(edges, srcCol, dstCol, part))
+    var labels: Option[RDD[(Long, Long)]] = None
+    var pins = adjPins
+    for (i <- 1 to iterations) {
+      val voters = labels match {
+        case None => adj.map { case (n, out) => (out, n) }
+        case Some(l) => localJoin(adj, l).values.map { case (out, lab) => (out, lab.get) }
       }
-      i += 1
-      if (i % pinEvery == 0 || i == iterations) {
-        val (pinned, nextPins) = Pins.pin(next)
-        Pins.release(labels, labelPins)
-        labels = pinned
-        labelPins = nextPins
-      } else {
-        labels = next
-      }
+      val counts = combine(
+        voters.flatMap { case (out, l) => out.iterator.map(t => ((t, l), 1L)) }, part)(_ + _)
+      val next = combine(counts.map { case ((t, l), c) => (t, (c, l)) }, part)(
+        (a, b) => if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
+        .mapValues(_._2)
+      val (l, ids) = pinRound(next, i, iterations, pinEvery)
+      labels = Some(l)
+      pins ++= ids
     }
-    Pins.release(e, ePins)
-    Pins.register(labels, labelPins)
-    labels
+    result(edges, srcCol, dstCol, labels.get, StructField("label", LongType), pins)
   }
 
   /** Fixed-iteration HITS (Kleinberg 1999, "Authoritative sources in
@@ -812,9 +705,9 @@ object Graphs {
     var authPins = Set.empty[Int]
     var i = 0
     while (i < iterations) {
-      // authority half-step: in-edge sum of hub scores; the union-zero
-      // trick (pageRank) keeps no-in-edge nodes present without a
-      // second join
+      // authority half-step: in-edge sum of hub scores; every node
+      // also sends itself a zero row, which keeps no-in-edge nodes
+      // present without a second join
       val rawA = eBySrc.join(hubs, eBySrc("src") === hubs("node"))
         .select(col("dst").as("node"), col("h").as("c"))
         .unionByName(nodes.select(col("node"), lit(0L).as("c")))

@@ -1,6 +1,9 @@
 package graft.functions
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Tracked eager checkpoints ("pins") for operators that must
   * materialize an intermediate to avoid re-running an expensive scan
@@ -74,10 +77,31 @@ private[graft] object Pins {
     (out, ids)
   }
 
-  def release(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+  /** RDD twin of [[pin]] for operators that iterate on key-value RDDs
+    * (the [[Graphs]] rounds): marks `rdd` for a checkpoint and runs NO
+    * job. The first action over it — or over anything computed from it
+    * — fills the pin, so a chain of pinned rounds runs as the stages of
+    * one job; after that job only the pin nearest its end is truncated
+    * (Spark checkpoints the last marked RDD of a lineage), the others
+    * are plain cached blocks. Blocks are stored serialized: sizing
+    * deserialized blocks (Spark samples every object graph) costs more
+    * CPU than the serialization. The RDD's own id is returned for
+    * [[release]]; with a checkpoint dir the blocks are cached as well,
+    * so the checkpoint write reads them instead of recomputing, and
+    * the checkpoint files stay as with [[pin]].
+    */
+  def pinRdd[T](rdd: RDD[T]): (RDD[T], Set[Int]) = {
+    rdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    if (rdd.sparkContext.getCheckpointDir.isDefined) rdd.checkpoint()
+    else rdd.localCheckpoint()
+    (rdd, Set(rdd.id))
   }
+
+  def release(df: DataFrame, ids: Set[Int]): Unit =
+    release(df.sparkSession.sparkContext, ids)
+
+  def release(sc: SparkContext, ids: Set[Int]): Unit =
+    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
   private val registry =
     java.util.Collections.synchronizedMap(

@@ -2,8 +2,6 @@ package graft.mql
 
 import graft.model.Meta
 
-import org.apache.spark.sql.Column
-
 /** The temporal date-range dimension applied to every query
   * (reference: metrique/parse.py:74-130,305-314; semantics frozen in
   * the reference's test_parse.py:54-76).
@@ -49,8 +47,4 @@ object DateRange {
       case (None, d) => d
     }
   }
-
-  /** Compile directly to a Column given a schema. */
-  def toColumn(date: Option[String], schema: org.apache.spark.sql.types.StructType): Option[Column] =
-    toMql(date).map(Compiler.compile(_, schema))
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Scale probe for the Graphs operators: synthetic graphs of three
   * shapes (`GRAPH_PROBE_KIND`):
@@ -19,10 +18,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *    uncombined vote list.
   *
   * `sbt "Test/runMain graft.GraphProbe [nNodes] [iters] [ops]"` where
-  * `ops` is a comma list from pagerank,lpa,hits,lpa_ab (default
-  * pagerank). `lpa_ab` runs labelPropagation under BOTH vote shapes
-  * (combine vs raw — r15 adjudication) and prints wall seconds +
-  * total shuffle-write bytes + a label checksum for each.
+  * `ops` is a comma list from pagerank,lpa,hits (default pagerank).
   */
 object GraphProbe {
   def main(args: Array[String]): Unit = {
@@ -40,18 +36,6 @@ object GraphProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    // total shuffle-write bytes across completed stages — the §2.3
-    // observable that adjudicates a map-side-combine trade. Listener
-    // delivery is async; snapshots sleep briefly to drain.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        val m = ev.stageInfo.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
-    def drainAndRead(): Long = { Thread.sleep(1500); shuffleBytes.get() }
 
     val edges: DataFrame = kind match {
       case "community" =>
@@ -93,81 +77,12 @@ object GraphProbe {
       println(s"[probe] top ranks: ${top.map(r => s"${r.getLong(0)}:${r.getLong(1)}").mkString(" ")}")
       functions.Graphs.unpin(pr)
     }
-    if (ops("pr_ab")) {
-      // union-zero vs rep-edge-fused per-round shape (r15, verdict #7);
-      // identical checksums prove result identity
-      val reps = sys.env.getOrElse("GRAPH_PROBE_AB_REPS", "3").toInt
-      for (rep <- 1 to reps; fuse <- Seq(false, true)) {
-        val b0 = drainAndRead()
-        val t0 = System.nanoTime()
-        val pr = functions.Graphs.pageRank(saved, "src", "dst", iters,
-          850, 1, "auto", fuseZero = fuse)
-        val sums = pr.agg(count(lit(1)), sum(col("rank_nano")),
-          bit_xor(xxhash64(col("node"), col("rank_nano")))).head()
-        val secs = (System.nanoTime() - t0) / 1e9
-        val bytes = drainAndRead() - b0
-        println(f"[probe] pr_ab rep=$rep fuseZero=$fuse%-5s " +
-          f"$secs%7.2f s  shuffleMB=${bytes / 1e6}%9.1f  " +
-          s"rows=${sums.getLong(0)} sumRank=${sums.getLong(1)} " +
-          s"xorHash=${sums.getLong(2)}")
-        functions.Graphs.unpin(pr)
-      }
-    }
     if (ops("lpa")) {
       val t0 = System.nanoTime()
       val lp = functions.Graphs.labelPropagation(saved, "src", "dst", iterations = iters)
       val nComm = lp.select(countDistinct(col("label"))).head.getLong(0)
       println(f"[probe] labelPropagation ($nNodes nodes, $iters iters)  ${(System.nanoTime() - t0) / 1e9}%8.2f s  communities=$nComm")
       functions.Graphs.unpin(lp)
-    }
-    if (ops("lpa_ab")) {
-      // alternate the two shapes run-to-run so neither owns the warm
-      // caches; equality of the checksums proves result identity
-      val reps = sys.env.getOrElse("GRAPH_PROBE_AB_REPS", "3").toInt
-      for (rep <- 1 to reps;
-           shape <- sys.env.getOrElse("GRAPH_PROBE_LPA_SHAPES",
-             "combine,raw").split(",").toSeq) {
-        val b0 = drainAndRead()
-        val t0 = System.nanoTime()
-        val lp = functions.Graphs.labelPropagation(
-          saved, "src", "dst", iters, 1, shape)
-        val sums = lp.agg(count(lit(1)), sum(col("label")),
-          bit_xor(xxhash64(col("node"), col("label")))).head()
-        val secs = (System.nanoTime() - t0) / 1e9
-        val bytes = drainAndRead() - b0
-        println(f"[probe] lpa_ab rep=$rep shape=$shape%-7s " +
-          f"$secs%7.2f s  shuffleMB=${bytes / 1e6}%9.1f  " +
-          s"rows=${sums.getLong(0)} sumLabel=${sums.getLong(1)} " +
-          s"xorHash=${sums.getLong(2)}")
-        functions.Graphs.unpin(lp)
-      }
-    }
-    if (ops("lpa_plan")) {
-      // one ROUND-BODY plan per vote shape (the gate's result frame is
-      // a pinned LogicalRDD — the per-round physical shape only exists
-      // inside the loop, so rebuild one round here verbatim)
-      val half = saved.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull &&
-          col("src") =!= col("dst"))
-      val e = half.unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(col("src"))
-      val labels = e.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-      for (shape <- Seq("combine", "raw")) {
-        val votes = e.join(labels, e("src") === labels("node"))
-          .select(col("dst").as("node"), col("label"))
-        val counted = (shape match {
-          case "raw" => votes.repartition(col("node"))
-          case _ => votes
-        }).groupBy("node", "label").agg(count(lit(1)).as("c"))
-        val next = counted.groupBy("node")
-          .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-          .select(col("node"), (-col("m.nl")).as("label"))
-        println(s"\n========== lpa round body, voteShape=$shape ==========")
-        println(next.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      }
     }
     if (ops("hits")) {
       val t0 = System.nanoTime()

@@ -1536,6 +1536,19 @@ class SimilaritySpec extends SparkSpec {
     assert(got == expected.toMap)
   }
 
+  test("connectedComponents registers its last pin; releaseAllPins reclaims it") {
+    val sc = spark.sparkContext
+    val comps = Dedup.connectedComponents(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"))
+    assert(comps.collect().length == 5)
+    val pins = Pins.registered(comps)
+    assert(pins.nonEmpty && pins.forall(sc.getPersistentRDDs.contains),
+      "the last round's pin must be live and registered on the result")
+    assert(Curation.releaseAllPins(spark) >= pins.size)
+    assert(pins.forall(id => !sc.getPersistentRDDs.contains(id)),
+      "releaseAllPins must unpersist the connectedComponents pin")
+  }
+
   test("connectedComponents feeds contamination-safe hashSplit keys") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val comps = Dedup.connectedComponents(pairs)

@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 
 /** Integer-nano PageRank: hand-checkable invariants, a naive
@@ -420,6 +422,131 @@ class GraphsSpec extends SparkSpec {
       s"only the final hub+auth raw pins may survive, got ${htPins.size}")
     Graphs.unpin(ht)
     assert(htPins.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)))
+  }
+
+  /** Jobs and submitted stages of `body`, counted by a listener that
+    * keeps only events of a job group set for the call.
+    */
+  private def jobsOf(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graphs-spec-${java.util.UUID.randomUUID()}"
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val groupJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) { groupJobs.add(e.jobId); started.incrementAndGet() }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (groupJobs.contains(e.jobId)) ended.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "graphs job count", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      // the bus is asynchronous: wait until every counted job has ended
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while ((started.get == 0 || ended.get < started.get) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(started.get > 0 && ended.get == started.get, "listener bus did not drain")
+      (started.get, stages.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fixed rounds run as stages of one job: job and stage counts per call") {
+    val rnd = new scala.util.Random(3)
+    val e = (1 to 400).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .toDF("src", "dst")
+    // setup job (vertex table + node count), rounds job, the caller's collect
+    val (prJobs, prStages) = jobsOf(Graphs.pageRank(e, "src", "dst", 8).collect())
+    assert(prJobs <= 3, s"pageRank(8) ran $prJobs jobs")
+    assert(prStages <= 8 + 4, s"pageRank(8) ran $prStages stages: more than one shuffle per round")
+    val (lpJobs, lpStages) = jobsOf(Graphs.labelPropagation(e, "src", "dst", 5).collect())
+    assert(lpJobs <= 3, s"labelPropagation(5) ran $lpJobs jobs")
+    assert(lpStages <= 2 * 5 + 3,
+      s"labelPropagation(5) ran $lpStages stages: more than two shuffles per round")
+    // K5 with a 4-node path hanging off it: at k=2 the path peels one
+    // node per round, then a round that removes nothing ends the peel
+    val core = for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)
+    val path = Seq((5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
+    val peelRounds = 5
+    val (kcJobs, _) = jobsOf {
+      val got = Graphs.kCore((core ++ path).toDF("src", "dst"), "src", "dst", 2)
+        .as[(Long, Long)].collect().toMap
+      assert(got == (1L to 5L).map(_ -> 4L).toMap)
+    }
+    assert(kcJobs <= peelRounds + 2, s"kCore ran $kcJobs jobs for $peelRounds peel rounds")
+    Curation.releaseAllPins(spark)
+  }
+
+  test("rewritten operators give identical rows at shuffle partitions 1 and 7") {
+    val rnd = new scala.util.Random(5)
+    val e = (1 to 300).map(_ =>
+      (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong, 1L + rnd.nextInt(4)))
+    def run(partitions: Int): Seq[Seq[(Long, Long)]] = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      val df = s.createDataFrame(e).toDF("src", "dst", "w")
+      val seeds = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L), Tuple1(3L))).toDF("s")
+      Seq(
+        Graphs.pageRank(df, "src", "dst", 6),
+        Graphs.weightedPageRank(df, "src", "dst", "w", 6),
+        Graphs.personalizedPageRank(df, "src", "dst", seeds, "s", 6),
+        Graphs.labelPropagation(df, "src", "dst", 4),
+        Graphs.kCoreRounds(df, "src", "dst", 5, 2),
+        Graphs.kCore(df, "src", "dst", 5)
+      ).map { r =>
+        assert(r.rdd.getNumPartitions == partitions)
+        val rows = r.as[(Long, Long)].collect().toSeq.sorted
+        Graphs.unpin(r)
+        rows
+      }
+    }
+    val one = run(1)
+    assert(one.forall(_.nonEmpty), "an empty result would make the comparison vacuous")
+    assert(one == run(7))
+  }
+
+  test("reliable-checkpoint mode: results match the replays and survive block release") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-graphs-ckpt-").toString
+    sc.setCheckpointDir(dir)
+    try {
+      val rnd = new scala.util.Random(17)
+      val e = (1 to 120).map(_ => (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
+      val df = e.toDF("src", "dst")
+      val pr = Graphs.pageRank(df, "src", "dst", 4)
+      val lp = Graphs.labelPropagation(df, "src", "dst", 3)
+      val kc = Graphs.kCore(df, "src", "dst", 3)
+      def read() = (pr.as[(Long, Long)].collect().toMap, lp.as[(Long, Long)].collect().toMap,
+        kc.as[(Long, Long)].collect().toMap)
+      val want = (naivePr(e, 4), naiveLpa(e, 3), naiveCore(e, 3, None))
+      assert(read() == want)
+      Seq(pr, lp, kc).foreach(Graphs.unpin)
+      assert(read() == want, "a result changed after its blocks were released")
+    } finally {
+      // restore the no-dir default for the other suites (the field is
+      // private; reflection is the only unset path)
+      val f = sc.getClass.getDeclaredField("checkpointDir")
+      f.setAccessible(true)
+      f.set(sc, None)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("an integer overflow fails loudly, as ANSI SQL arithmetic does") {
+    // two parallel edges whose summed weight exceeds 2^63
+    val big = Long.MaxValue / 2 + 1
+    val ex = intercept[Exception] {
+      Graphs.weightedPageRank(Seq((1L, 2L, big), (1L, 2L, big)).toDF("src", "dst", "w"),
+        "src", "dst", "w", iterations = 1)
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), s"not an overflow: $ex")
   }
 
   test("Pins.releaseAll reclaims pins leaked by callers that skip unpin") {

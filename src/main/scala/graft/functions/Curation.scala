@@ -524,15 +524,11 @@ object Curation {
       orderBy: Seq[Column],
       numPartitions: Int = 0): DataFrame = {
     val (out, parted, partedPins) = packSequencesInternal(df, tokens, budget, orderBy, numPartitions)
-    // pin the finished result, then release the phase-1/2 pin. With
-    // a checkpoint dir configured both pins are RELIABLE checkpoints
-    // (survive executor loss/decommission — routine on large
-    // dynamically-allocated clusters); localCheckpoint is the
-    // single-JVM fallback, whose blocks die with their executor.
-    val pinned =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) out.checkpoint(true)
-      else out.localCheckpoint(true)
+    // pin the finished result (registered on it, for unpin and
+    // releaseAllPins), then release the phase-1/2 pin
+    val (pinned, pins) = Pins.pin(out)
     Pins.release(parted, partedPins)
+    Pins.register(pinned, pins)
     pinned
   }
 
@@ -990,10 +986,8 @@ object Curation {
         }
       }(org.apache.spark.sql.Encoders.row(schemaOut))
         .drop("__pid")
-      val narrowed = pre(ranked)
-      val pinned =
-        if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) narrowed.checkpoint(true)
-        else narrowed.localCheckpoint(true)
+      val (pinned, pins) = Pins.pin(pre(ranked))
+      Pins.register(pinned, pins)
       (pinned, total)
     } finally Pins.release(parted, partedPins)
   }

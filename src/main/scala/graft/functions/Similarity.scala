@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.store.StagedSwap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -556,17 +558,13 @@ object Similarity {
       .orderBy(col("cos").desc, col("aid").asc)
     // pin: `assigned` feeds BOTH the edge join and the final component
     // join — without it the full-corpus k-way cross-score and window
-    // run twice (reliable checkpoint when a dir is set, else local)
-    val assignedPlan = df.select(col(idCol), col(vecCol))
+    // run twice; the pin is registered on the result
+    val (assigned, assignedPins) = Pins.pin(df.select(col(idCol), col(vecCol))
       .crossJoin(broadcast(anchors))
       .withColumn("cos", DedupExpressions.cosineSim(col(vecCol), col("avec")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-      .select(col(idCol), col(vecCol), col("aid").as("cluster"))
-    val assigned =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        assignedPlan.checkpoint(true)
-      else assignedPlan.localCheckpoint(true)
+      .select(col(idCol), col(vecCol), col("aid").as("cluster")))
     // at most k rows (one per anchor cell) — broadcasts for free both
     // as the edge-join prefilter and as the exempted flag at the end
     val cellSizes = assigned.groupBy("cluster")
@@ -643,10 +641,12 @@ object Similarity {
             coalesce(col("component"), col(idCol)).as("canon"),
             coalesce(col("_ex2"), lit(false)).as("exempted"))
     }
-    flagged
+    val out = flagged
       .withColumn("kept", col("canon") === col(idCol))
       .select(col(idCol), col("cluster"), col("canon"), col("kept"),
         col("exempted"))
+    Pins.register(out, assignedPins)
+    out
   }
 
   /** Corpus-wide max |component| — the global scale for
@@ -1386,16 +1386,11 @@ object Similarity {
     * snapshot, repartition so each output task writes whole cells
     * (`filesPerCell == 1` → one file per cell; else a deterministic
     * row-hash salt splits each cell into ≤ `filesPerCell`), write to
-    * a `_compacting` sibling, swap via two renames, delete the
-    * retired copy — the
-    * [[graft.store.IncrementalStore.compactHistory]] pattern.
-    *
-    * Crash contract: a crash before the first rename leaves the old
-    * layout untouched; between the two renames the layout briefly
-    * lives at `_retired` only — the NEXT maintenance call detects
-    * that state on entry and RESTORES it before proceeding, so the
-    * pass is self-healing (a reader in that window sees
-    * path-not-found and retries).
+    * a `_compacting` sibling and [[StagedSwap.swap]] it in via
+    * `_retired`. A crash between the two renames leaves the layout at
+    * `_retired` only — the NEXT maintenance call restores it on entry
+    * ([[restoreRetiredLayout]]), so the pass is self-healing (a reader
+    * in that window sees path-not-found and retries).
     *
     * Writer exclusion REQUIRED: the pass snapshots the directory,
     * so a batch appended concurrently (appendIvfPqEncoded, the
@@ -1420,9 +1415,7 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = target.getParent
-    val staging = new Path(parent, target.getName + "_compacting")
-    val retired = new Path(parent, target.getName + "_retired")
+    val staging = StagedSwap.stagingOf(target)
     def listDataFiles(): Set[String] = {
       val it = fs.listFiles(target, true)
       val b = Set.newBuilder[String]
@@ -1450,14 +1443,7 @@ object Similarity {
         s"layout at $target changed during the rewrite (concurrent append?) — " +
           "quiesce ingest before compacting/repairing; the live layout is untouched")
     }
-    fs.delete(retired, true)
-    if (!fs.rename(target, retired))
-      throw new IllegalStateException(s"layout compaction rename failed for $target")
-    if (!fs.rename(staging, target)) {
-      fs.rename(retired, target) // roll back
-      throw new IllegalStateException(s"layout compaction swap failed for $target")
-    }
-    fs.delete(retired, true)
+    StagedSwap.swap(fs, staging, target, StagedSwap.retiredOf(target))
   }
 
   /** Self-heal a layout left at `_retired` by a crash between
@@ -1473,33 +1459,13 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retired = new Path(target.getParent, target.getName + "_retired")
-    if (!fs.exists(target) && fs.exists(retired)) {
-      if (!fs.rename(retired, target))
-        throw new IllegalStateException(
-          s"crash recovery: could not restore $retired to $target")
-    } else if (fs.exists(target) && fs.exists(retired)) {
-      // crash after the SECOND rename but before the delete: the live
-      // layout is the new data, the `_retired` copy is always the
-      // just-replaced layout — drop it (the per-cell branch below has
-      // done this since r13; without it a stale full copy lingers on
-      // disk until the next whole-layout rewrite)
-      fs.delete(retired, true)
-    }
-    // per-cell crash recovery: a cell at `_cellretired/N` with no
-    // live `cell=N` dir is mid-swap — restore it; with BOTH present
-    // (crash after the second rename, before the delete) the live
-    // dir is the new data — drop the retired copy. Stage leftovers
-    // are pre-swap garbage either way.
+    StagedSwap.restore(fs, target, StagedSwap.retiredOf(target))
+    // per-cell crash recovery, the same rules per cell; stage leftovers
+    // are pre-swap garbage either way
     val cellRetired = new Path(target.getParent, target.getName + "_cellretired")
     if (fs.exists(cellRetired)) {
       fs.listStatus(cellRetired).foreach { st =>
-        val live = new Path(target, "cell=" + st.getPath.getName)
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new IllegalStateException(
-              s"crash recovery: could not restore ${st.getPath} to $live")
-        } else fs.delete(st.getPath, true)
+        StagedSwap.restore(fs, new Path(target, "cell=" + st.getPath.getName), st.getPath)
       }
       fs.delete(cellRetired, true)
     }
@@ -1590,15 +1556,7 @@ object Similarity {
           s"cell $cell at $target changed during the rewrite (concurrent " +
             "append?) — quiesce ingest before compacting; the live cell is untouched")
       }
-      val retired = new Path(retiredRoot, cell.toString)
-      fs.delete(retired, true)
-      if (!fs.rename(live, retired))
-        throw new IllegalStateException(s"cell compaction rename failed for $live")
-      if (!fs.rename(stage, live)) {
-        fs.rename(retired, live) // roll back
-        throw new IllegalStateException(s"cell compaction swap failed for $live")
-      }
-      fs.delete(retired, true)
+      StagedSwap.swap(fs, stage, live, new Path(retiredRoot, cell.toString))
     }
     val lanes = math.max(1, math.min(4, cells.length))
     if (lanes == 1) cells.foreach(rewriteCell)

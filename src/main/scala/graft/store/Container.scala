@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.functions.Pins
 import graft.model.Meta
 import graft.mql.{Compiler, DateRange, Fields}
 
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types._
   * State is a DataFrame carrying the [[Meta]] columns. Reads compile
   * MQL + the temporal date dimension into Catalyst predicates; writes
   * are whole-plan recomputations (Spark has no in-place UPDATE): the
-  * SCD2 `upsert` is ONE full-outer join emitting 0-2 rows per key, and
+  * SCD2 `upsert` is one [[Scd2.merge]] of the current rows, and
   * persistence partitions by `is_current` so snapshot queries (`_end
   * IS NULL` — by far the common case) prune to one partition at 100 TB
   * scale (see [[IncrementalStore]] for the append-only-history flush).
@@ -125,29 +126,18 @@ class Container(
       spark.sparkContext.parallelize(
         vals.map(Row(_)), math.max(1, vals.size / 500000)),
       StructType(Seq(StructField("k", oidType))))
-    // eager checkpoint that TRACKS the RDD blocks it pins, so each
-    // hop can release the previous hop's frames — without the cut, the
-    // plan lineage (and with it, planning time) grows per hop; without
-    // the release, a long closure would pin every fringe generation in
-    // executor memory for the life of the session. Routed through
-    // [[graft.functions.Pins]] (r15): its exact-id attribution reads
-    // the checkpoint RDD id off the returned plan, so a concurrent
-    // pinner (parallel Verify gates) can never be misattributed here —
-    // the old local set-diff spanned this pin's whole eager job and
-    // could capture, then release, another gate's checkpoint blocks.
-    def pin(plan: DataFrame): (DataFrame, Set[Int]) =
-      graft.functions.Pins.pin(plan)
-    def release(ids: Set[Int]): Unit = ids.foreach { id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false))
-    }
-
     // Small fringes (the reference-scale common case) ride a driver
     // set + an isin literal pushed to the scan as an In filter. The
     // switch test is a limit-collect (isinMax+1 rows max), so the
     // driver NEVER materializes an oversized fringe: the first hop
     // whose child set exceeds isinMax switches PERMANENTLY to the
     // distributed loop below, where fringe/seen stay DataFrames and
-    // only the final closure is collected.
+    // only the final closure is collected. Each of its hops pins its
+    // frames (Pins.pin: an eager checkpoint that tracks its blocks) and
+    // releases the previous hop's — without the cut, the plan lineage
+    // (and with it, planning time) grows per hop; without the release,
+    // a long closure would pin every fringe generation in executor
+    // memory for the life of the session.
     var seen = oids.toSet
     var fringe = oids.toSet
     var depth = 0
@@ -161,13 +151,13 @@ class Container(
         fringe = ks -- seen
         seen ++= ks
       } else {
-        val (seenBase, basePins) = pin(toOidDf(seen.toSeq))
+        val (seenBase, basePins) = Pins.pin(toOidDf(seen.toSeq))
         val (fringeDf, fringePins) =
-          pin(kids.join(seenBase, Seq("k"), "left_anti"))
+          Pins.pin(kids.join(seenBase, Seq("k"), "left_anti"))
         // seen must absorb the oversized fringe too (the driver loop's
         // `seen ++= kids`), or the next hop re-admits its parents
-        val (seenDf, seenPins) = pin(seenBase.union(fringeDf))
-        release(basePins)
+        val (seenDf, seenPins) = Pins.pin(seenBase.union(fringeDf))
+        Pins.release(spark.sparkContext, basePins)
         big = Some((seenDf, seenPins, fringeDf, fringePins))
       }
       depth += 1
@@ -186,16 +176,16 @@ class Container(
           // so the union below stays duplicate-free with no extra
           // distinct shuffle
           val (newFringe, nfPins) =
-            pin(kidsOf(hop).join(seenDf, Seq("k"), "left_anti"))
-          val (newSeen, nsPins) = pin(seenDf.union(newFringe))
-          release(seenPins); release(fringePins)
+            Pins.pin(kidsOf(hop).join(seenDf, Seq("k"), "left_anti"))
+          val (newSeen, nsPins) = Pins.pin(seenDf.union(newFringe))
+          Pins.release(spark.sparkContext, seenPins ++ fringePins)
           seenDf = newSeen; seenPins = nsPins
           fringeDf = newFringe; fringePins = nfPins
           fringeCount = fringeDf.count()
           depth += 1
         }
         val out = seenDf.collect().map(_.get(0)).toSeq.sortBy(_.toString)
-        release(seenPins); release(fringePins)
+        Pins.release(spark.sparkContext, seenPins ++ fringePins)
         out
     }
   }
@@ -295,67 +285,17 @@ class Container(
     this
   }
 
-  /** SCD2 snapshot upsert (reference: sqlalchemy.py:906-975).
-    *
-    * Incoming rows are *current* versions (`_end == null`). Per `_oid`:
-    *  - new oid                      → insert as current
-    *  - same oid, same `_hash`       → no-op (idempotent re-flush;
-    *    reference golden: test_MetriqueContainer.py:164-170)
-    *  - same oid, different `_hash`  → rotate: old current gets
-    *    `_end = new._start` and `_id = "{oid}:{start}"`; new row inserted
-    *
-    * Pure join algebra — one shuffle by `_oid` (or broadcast when the
-    * batch is small vs the table), no per-row driver logic, safe at any
-    * scale. History rows are untouched, so a physical layout partitioned
-    * by `is_current` rewrites only the (small) current partition.
+  /** SCD2 snapshot upsert (reference: sqlalchemy.py:906-975): the
+    * current rows merge with the batch through [[Scd2.merge]], whose
+    * scaladoc holds the per-key rules. History rows are untouched, so a
+    * physical layout partitioned by `is_current` rewrites only the
+    * (small) current partition. `autosnap = false` is [[historyImport]].
     */
   def upsert(incoming: DataFrame, autosnap: Boolean = true): Container = {
     if (!autosnap) return historyImport(incoming)
     val base = mutableState
-    val curr = base.filter(col(Meta.END).isNull)
-    val hist = base.filter(col(Meta.END).isNotNull)
-
-    // keep only the latest incoming version per oid within the batch
-    val w = Window.partitionBy(Meta.OID).orderBy(col(Meta.START).desc)
-    val inc = incoming
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-
-    // Single-pass formulation: ONE full-outer join on _oid, emitting
-    // 0-2 rows per key via array+explode — per key:
-    //   incoming only            -> [new]          (insert)
-    //   current only             -> [old]          (untouched)
-    //   same content (_hash)     -> [old]          (idempotent re-flush)
-    //   changed content          -> [old rotated, new]
-    // One shuffle instead of the naive 3-join split that re-scans the
-    // current partition per branch — the property that matters when
-    // `state` is a 100 TB table and only the current partition rewrites.
-    val cols: Seq[String] = base.columns.toSeq
-    val incAligned = cols.foldLeft(inc) { (d, c) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, lit(null).cast(base.schema(c).dataType))
-    }.select(cols.map(col): _*)
-
-    val currS = curr.select(col(Meta.OID).as("_k"), struct(cols.map(col): _*).as("_c"))
-    val incS = incAligned.select(col(Meta.OID).as("_k"), struct(cols.map(col): _*).as("_i"))
-    val joined = currS.join(incS, Seq("_k"), "full_outer")
-
-    val rotatedOld = struct(cols.map {
-      case Meta.END => col("_i." + Meta.START).as(Meta.END)
-      case Meta.ID =>
-        Meta.genId(col("_c." + Meta.OID), col("_c." + Meta.START), col("_i." + Meta.START))
-          .as(Meta.ID)
-      case c => col("_c." + c).as(c)
-    }: _*)
-
-    val emitted = joined.select(explode(
-      when(col("_i").isNull, array(col("_c")))
-        .when(col("_c").isNull, array(col("_i")))
-        .when(col("_c." + Meta.HASH) === col("_i." + Meta.HASH), array(col("_c")))
-        .otherwise(array(rotatedOld, col("_i")))).as("_r"))
-      .select(cols.map(c => col("_r." + c).as(c)): _*)
-
-    state = hist.unionByName(emitted)
+    val merged = Scd2.merge(base.filter(col(Meta.END).isNull), incoming)
+    state = base.filter(col(Meta.END).isNotNull).unionByName(merged.drop(Scd2.Closed))
     this
   }
 
@@ -394,48 +334,25 @@ class Container(
     * `dest` (the load → mutate → save loop): a direct
     * `mode(overwrite).parquet(dest)` deletes the directory before the
     * reading plan executes, failing the job and losing the table. Write
-    * to a sibling staging dir first (fully materializing the plan), then
-    * swap via rename — the same versioned-dir idea as
-    * [[IncrementalStore]]'s MANIFEST, collapsed to one generation.
+    * to the `<name>_compacting` sibling first (fully materializing the
+    * plan), then [[StagedSwap.swap]] it in via `<name>_retired`, which
+    * [[Container.load]] restores after a crash.
     */
   private def stagedOverwrite(
       df: DataFrame,
       dest: String,
       partCols: Seq[String] = Seq(Container.PartCol)): Unit = {
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new org.apache.hadoop.fs.Path(
-      destPath.getParent, s".${destPath.getName}.staging-$tag")
-    var staged = false
-    try {
-      df.write
-        .mode("overwrite")
-        .partitionBy(partCols: _*)
-        .parquet(staging.toString)
-      staged = true
-      // the staged write is a completed job: nothing reads `dest`
-      // anymore. Swap by renaming dest ASIDE first (never delete the
-      // only copy before the new one is visible): a crash mid-swap
-      // leaves either the old or the new generation at `dest`, not an
-      // empty path. NB rename is only atomic on real filesystems; on
-      // object stores (S3A) pair this layout with a manifest commit
-      // like [[IncrementalStore]]'s.
-      val retired = new org.apache.hadoop.fs.Path(
-        destPath.getParent, s".${destPath.getName}.old-$tag")
-      val hadOld = fs.exists(destPath)
-      if (hadOld && !fs.rename(destPath, retired))
-        throw new java.io.IOException(s"rename $destPath -> $retired failed")
-      if (!fs.rename(staging, destPath)) {
-        // restore the old generation before failing
-        if (hadOld) fs.rename(retired, destPath)
-        throw new java.io.IOException(s"rename $staging -> $destPath failed")
-      }
-      if (hadOld) fs.delete(retired, true)
-    } finally {
-      // a failed staging write must not leak the staging dir
-      if (!staged && fs.exists(staging)) fs.delete(staging, true)
+    val live = new org.apache.hadoop.fs.Path(dest)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = StagedSwap.stagingOf(live)
+    try df.write.mode("overwrite").partitionBy(partCols: _*).parquet(staging.toString)
+    catch {
+      case e: Throwable =>
+        // a failed staging write must not leak the staging dir
+        fs.delete(staging, true)
+        throw e
     }
+    StagedSwap.swap(fs, staging, live, StagedSwap.retiredOf(live))
   }
 
   /** Persist with Z-order clustering over `cols` (multi-column layout
@@ -556,9 +473,15 @@ object Container {
     */
   val DeptreeIsinMax = 10000
 
-  /** Open a persisted container. */
-  def load(spark: SparkSession, name: String, path: String): Container =
+  /** Open a persisted container, first restoring a save that a crash
+    * cut short between its two renames ([[StagedSwap.restore]]).
+    */
+  def load(spark: SparkSession, name: String, path: String): Container = {
+    val live = new org.apache.hadoop.fs.Path(path)
+    StagedSwap.restore(live.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      live, StagedSwap.retiredOf(live))
     new Container(spark, name, spark.read.parquet(path), Some(path))
+  }
 
   /** Wrap a plain DataFrame (adds meta columns). */
   def fromRaw(

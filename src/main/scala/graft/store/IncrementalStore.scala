@@ -1,10 +1,7 @@
 package graft.store
 
-import graft.model.Meta
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SCD2 store with incremental flush — the layout that makes version
@@ -13,20 +10,20 @@ import org.apache.spark.sql.functions._
   * small writes).
   *
   * Layout under `root`:
-  *   - `history/` — closed versions, APPEND-ONLY (never rewritten);
+  *   - `history/` — closed versions, APPEND-ONLY (rewritten only by
+  *     [[compactHistory]]);
   *   - `current_v<N>/` — the current snapshot, REPLACED per flush
   *     (its size is the entity count, a sliver of total history);
   *   - `MANIFEST` — the live snapshot version N (atomic cutover, and
   *     the reason a flush never reads the directory it is writing).
   *
-  * Per flush: one full-outer join of current × incoming (the
-  * single-pass upsert split), the newly-closed versions append to
-  * `history/`, the new snapshot writes to `current_v<N+1>`, MANIFEST
-  * flips, the old snapshot dir is deleted. Write volume is
-  * O(|current| + |batch|) regardless of how much history has
-  * accumulated. Current-only reads (`date = null`) never touch
-  * `history/` — the union branch is eliminated by a literal-false
-  * filter, so the scan lists only the snapshot directory.
+  * A flush is one [[Scd2.merge]] of the snapshot with the batch: its
+  * rotated versions append to `history/`, the rest is the new snapshot
+  * at `current_v<N+1>`, MANIFEST flips, the old snapshot dir is
+  * deleted. Write volume is O(|current| + |batch|) regardless of how
+  * much history has accumulated. Current-only reads (`date = null`)
+  * never touch `history/` — the union branch is eliminated by a
+  * literal-false filter, so the scan lists only the snapshot directory.
   */
 class IncrementalStore private (
     val spark: SparkSession,
@@ -80,76 +77,40 @@ class IncrementalStore private (
 
   /** Compact the append-only history: many small flushes accumulate
     * many small files; rewrite them into `targetFiles` larger ones.
-    * Writes to a staging dir first and swaps via rename, so a crash
-    * mid-compaction leaves the original history intact (read path sees
-    * either the old or the new directory, never a partial mix).
+    * Writes `history_compacting` first and swaps it in via
+    * `history_retired` ([[StagedSwap.swap]]). A crash before the swap
+    * leaves the old history in place; a crash between its two renames
+    * leaves it at `history_retired` only, where a reader finds no
+    * history until [[IncrementalStore.open]] restores it.
     */
   def compactHistory(targetFiles: Int = 8): IncrementalStore = {
     history.foreach { h =>
-      val staging = new Path(root, "history_compacting")
+      val staging = StagedSwap.stagingOf(historyPath)
       fs.delete(staging, true)
       h.repartition(targetFiles).write.parquet(staging.toString)
-      val retired = new Path(root, "history_retired")
-      fs.delete(retired, true)
-      if (!fs.rename(historyPath, retired))
-        throw new IllegalStateException(s"compaction rename failed for $historyPath")
-      if (!fs.rename(staging, historyPath)) {
-        fs.rename(retired, historyPath) // roll back
-        throw new IllegalStateException(s"compaction swap failed for $historyPath")
-      }
-      fs.delete(retired, true)
+      StagedSwap.swap(fs, staging, historyPath, StagedSwap.retiredOf(historyPath))
     }
     this
   }
 
-  /** SCD2 flush: same per-key semantics as Container.upsert
-    * (insert / untouched / idempotent-skip / rotate+insert), with
-    * append-only history and snapshot replacement.
+  /** SCD2 flush: [[Scd2.merge]] of the current snapshot with the batch;
+    * the rotated old versions append to `history/` and the rest becomes
+    * the next snapshot. The first flush writes the batch's latest
+    * version per `_oid` as the snapshot.
     */
   def flushUpsert(incoming: DataFrame): IncrementalStore = {
     val v = readManifest()
-    // latest incoming version per oid
-    val w = Window.partitionBy(Meta.OID).orderBy(col(Meta.START).desc)
-    val inc = incoming
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-
-    val (closed, nextCurrent) = current match {
-      case None =>
-        (None, inc)
+    val nextCurrent = current match {
+      case None => Scd2.latest(incoming)
       case Some(curr) =>
-        val cols = curr.columns.toSeq
-        val incAligned = cols.foldLeft(inc) { (d, c) =>
-          if (d.columns.contains(c)) d
-          else d.withColumn(c, lit(null).cast(curr.schema(c).dataType))
-        }.select(cols.map(col): _*)
-        val currS = curr.select(col(Meta.OID).as("_k"), struct(cols.map(col): _*).as("_c"))
-        val incS = incAligned.select(col(Meta.OID).as("_k"), struct(cols.map(col): _*).as("_i"))
-        val joined = currS.join(incS, Seq("_k"), "full_outer")
-        val rotatedOld = struct(cols.map {
-          case Meta.END => col("_i." + Meta.START).as(Meta.END)
-          case Meta.ID =>
-            Meta.genId(col("_c." + Meta.OID), col("_c." + Meta.START), col("_i." + Meta.START))
-              .as(Meta.ID)
-          case c => col("_c." + c).as(c)
-        }: _*)
-        val changed = col("_c").isNotNull && col("_i").isNotNull &&
-          col("_c." + Meta.HASH) =!= col("_i." + Meta.HASH)
-        val closedDf = joined.filter(changed)
-          .select(cols.map(c => rotatedOld.getField(c).as(c)): _*)
-        val newCurr = joined.select(
-          when(col("_i").isNull, col("_c"))
-            .when(col("_c").isNull, col("_i"))
-            .when(col("_c." + Meta.HASH) === col("_i." + Meta.HASH), col("_c"))
-            .otherwise(col("_i")).as("_r"))
-          .select(cols.map(c => col("_r." + c).as(c)): _*)
-        (Some(closedDf), newCurr)
+        val merged = Scd2.merge(curr, incoming)
+        // append-only history
+        merged.filter(col(Scd2.Closed)).drop(Scd2.Closed)
+          .write.mode("append").parquet(historyPath.toString)
+        merged.filter(!col(Scd2.Closed)).drop(Scd2.Closed)
     }
-
-    // 1. append newly-closed versions to history (append-only)
-    closed.foreach(_.write.mode("append").parquet(historyPath.toString))
-    // 2. write the new snapshot to a FRESH dir (never the one we read)
+    // a FRESH dir (never the one we read), then atomic cutover + cleanup
     nextCurrent.write.mode("overwrite").parquet(currentPath(v + 1).toString)
-    // 3. atomic cutover + cleanup
     writeManifest(v + 1)
     fs.delete(currentPath(v), true)
     this
@@ -159,8 +120,8 @@ class IncrementalStore private (
 object IncrementalStore {
   def open(spark: SparkSession, name: String, root: String): IncrementalStore = {
     val s = new IncrementalStore(spark, name, root)
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(root))
+    s.fs.mkdirs(new Path(root))
+    StagedSwap.restore(s.fs, s.historyPath, StagedSwap.retiredOf(s.historyPath))
     s
   }
 }

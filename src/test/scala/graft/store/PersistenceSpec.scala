@@ -54,6 +54,26 @@ class PersistenceSpec extends SparkSpec {
     reloaded.saveZOrdered("_oid")
     assert(Container.load(spark, "t", dir).count(date = "~") == 4)
   }
+
+  test("a save cut between its two renames is restored by load") {
+    val root = Files.createTempDirectory("graft-persist-crash")
+    val live = root.resolve("t")
+    val rows = Seq((1L, 100.0, "a"), (2L, 100.0, "b"), (3L, 100.0, "c"))
+      .toDF("_oid", "_start", "v")
+      .withColumn(Meta.END, lit(null).cast(DoubleType))
+      .withColumn(Meta.HASH, Meta.contentHashOf("v" -> col("v")))
+      .withColumn(Meta.ID, Meta.genId(col("_oid"), col("_start"), col(Meta.END)))
+    new Container(spark, "t", rows, Some(live.toString)).save()
+    val retired = root.resolve("t_retired")
+    Files.move(live, retired)
+    val loaded = Container.load(spark, "t", live.toString)
+    assert(Files.exists(live) && !Files.exists(retired))
+    assert(loaded.count(date = "~") == 3)
+    // a later save through the same swap keeps every row
+    loaded.save()
+    assert(Container.load(spark, "t", live.toString).count(date = "~") == 3)
+    assert(root.toFile.list().toSet == Set("t"), "staged dirs leaked")
+  }
 }
 
 class BucketedSpec extends SparkSpec {
@@ -205,6 +225,22 @@ class IncrementalStoreSpec extends SparkSpec {
     // current-only read never lists the history directory
     val plan = s.currentDf.queryExecution.executedPlan.toString
     assert(plan.contains("current_v") && !plan.contains("history"))
+  }
+
+  test("a compaction cut between its two renames is restored by open") {
+    val root = Files.createTempDirectory("graft-inc-crash").resolve("t")
+    val s = IncrementalStore.open(spark, "t", root.toString)
+    (1 to 3).foreach(i => s.flushUpsert(batch((1L, i * 10.0, s"a$i"), (2L, i * 10.0, s"b$i"))))
+    assert(s.df.count() == 6)
+    // crash window: history moved aside, the staged copy not yet in
+    Files.move(root.resolve("history"), root.resolve("history_retired"))
+    val reopened = IncrementalStore.open(spark, "t", root.toString)
+    assert(Files.exists(root.resolve("history")) &&
+      !Files.exists(root.resolve("history_retired")))
+    assert(reopened.df.count() == 6)
+    reopened.compactHistory(targetFiles = 1)
+    assert(reopened.df.count() == 6)
+    assert(reopened.history.get.count() == 4)
   }
 }
 

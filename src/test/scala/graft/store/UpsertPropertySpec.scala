@@ -3,7 +3,7 @@ package graft.store
 import graft.SparkSpec
 import graft.model.Meta
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,13 +11,13 @@ import scala.util.Random
 
 /** SCD2 upsert invariants over random batch sequences, checked against
   * an in-memory sequential oracle (the reference's semantics:
-  * sqlalchemy.py:906-975 + container goldens).
+  * sqlalchemy.py:906-975 + container goldens), through both write
+  * paths: `Container.upsert` and `IncrementalStore.flushUpsert`.
   */
 class UpsertPropertySpec extends SparkSpec {
-  import spark.implicits._
 
-  private def toBatch(objs: Seq[(Long, String, Double)]): DataFrame =
-    objs.toDF("_oid", "v", "_start")
+  private def toBatch(objs: Seq[(Long, String, Double)], s: SparkSession = spark): DataFrame =
+    s.createDataFrame(objs).toDF("_oid", "v", "_start")
       .withColumn(Meta.END, lit(null).cast(DoubleType))
       .withColumn(Meta.HASH, Meta.contentHashOf("v" -> col("v")))
       .withColumn(Meta.ID, Meta.genId(col("_oid"), col("_start"), col(Meta.END)))
@@ -29,6 +29,8 @@ class UpsertPropertySpec extends SparkSpec {
       // oracle state: oid -> list of (start, end?, value)
       var oracle = Map.empty[Long, List[(Double, Option[Double], String)]]
       var c: Container = new Container(spark, "p", toBatch(Nil))
+      val store = IncrementalStore.open(spark, "p",
+        java.nio.file.Files.createTempDirectory("graft-prop").resolve("s").toString)
       var t = 0.0
       for (_ <- 0 until 5) {
         t += 10.0
@@ -49,26 +51,53 @@ class UpsertPropertySpec extends SparkSpec {
           }
         }
         c.upsert(toBatch(batch))
+        store.flushUpsert(toBatch(batch))
       }
-      val got = c.df.collect()
-        .map(r => (r.getLong(0), r.getDouble(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2)), r.getString(3)))
-        .toSet
       val expected = oracle.flatMap { case (oid, vs) =>
         vs.map { case (s, e, v) => (oid, s, e, v) }
       }.toSet
-      assert(got == expected, s"trial $trial")
-      // invariants: exactly one open version per touched oid;
-      // closed versions chain (end == next start)
-      val byOid = got.groupBy(_._1)
-      byOid.foreach { case (oid, vs) =>
-        assert(vs.count(_._3.isEmpty) == 1, s"oid $oid open-version count")
-        val sorted = vs.toSeq.sortBy(_._2)
-        sorted.sliding(2).foreach {
-          case Seq(a, b) => assert(a._3.contains(b._2), s"oid $oid chain break")
-          case _ =>
+      // the same sequence through both SCD2 write paths
+      for ((path, df) <- Seq("upsert" -> c.df, "flushUpsert" -> store.df)) {
+        val got = df.select("_oid", "_start", "_end", "v").collect()
+          .map(r => (r.getLong(0), r.getDouble(1),
+            if (r.isNullAt(2)) None else Some(r.getDouble(2)), r.getString(3)))
+          .toSet
+        assert(got == expected, s"trial $trial via $path")
+        // invariants: exactly one open version per touched oid;
+        // closed versions chain (end == next start)
+        val byOid = got.groupBy(_._1)
+        byOid.foreach { case (oid, vs) =>
+          assert(vs.count(_._3.isEmpty) == 1, s"oid $oid open-version count via $path")
+          val sorted = vs.toSeq.sortBy(_._2)
+          sorted.sliding(2).foreach {
+            case Seq(a, b) => assert(a._3.contains(b._2), s"oid $oid chain break via $path")
+            case _ =>
+          }
         }
       }
     }
+  }
+
+  test("same (_oid, _start) twice in a batch: the pick ignores row order and partitioning") {
+    val initial = Seq((1L, "z", 5.0), (2L, "y", 5.0))
+    val batch = Seq((1L, "a", 10.0), (1L, "b", 10.0), (2L, "x", 10.0))
+    def rows(df: DataFrame): Seq[String] =
+      df.select("_oid", "_start", "_end", "v", "_hash", "_id").collect().map(_.toString).toSeq.sorted
+    val runs = for {
+      partitions <- Seq(1, 7)
+      order <- Seq(batch, batch.reverse)
+    } yield {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      val c = new Container(s, "p", toBatch(initial, s)).upsert(toBatch(order, s))
+      val store = IncrementalStore.open(s, "p",
+        java.nio.file.Files.createTempDirectory("graft-tie").resolve("s").toString)
+      store.flushUpsert(toBatch(initial, s)).flushUpsert(toBatch(order, s))
+      (rows(c.df), rows(store.df))
+    }
+    val (viaUpsert, viaFlush) = runs.head
+    assert(viaUpsert.length == 4, s"expected 2 closed + 2 current rows, got $viaUpsert")
+    assert(viaUpsert == viaFlush, "upsert and flushUpsert picked differently")
+    runs.foreach(r => assert(r == runs.head, s"pick moved: $r vs ${runs.head}"))
   }
 }

@@ -104,7 +104,6 @@ class IncrementalStore private (
       case None => Scd2.latest(incoming)
       case Some(curr) =>
         val merged = Scd2.merge(curr, incoming)
-        // append-only history
         merged.filter(col(Scd2.Closed)).drop(Scd2.Closed)
           .write.mode("append").parquet(historyPath.toString)
         merged.filter(!col(Scd2.Closed)).drop(Scd2.Closed)

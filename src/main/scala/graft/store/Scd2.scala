@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   *    `_id = "{oid}:{start}"`) and tagged [[Closed]], plus the new row
   *
   * Pure join algebra: ONE full-outer join on `_oid` emitting 0-2 rows
-  * per key via array+explode — one shuffle (or a broadcast when the
-  * batch is small), no per-row driver logic, and no re-scan of the
-  * current rows per branch.
+  * per key via array+explode — one shuffle, no per-row driver logic,
+  * and no re-scan of the current rows per branch.
   */
 private[store] object Scd2 {
 

@@ -2,7 +2,6 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** SCD2 store with incremental flush — the layout that makes version
   * rotation affordable at 100 TB (SURVEY §7.3 "hard part #1": Spark
@@ -14,16 +13,31 @@ import org.apache.spark.sql.functions._
   *     [[compactHistory]]);
   *   - `current_v<N>/` — the current snapshot, REPLACED per flush
   *     (its size is the entity count, a sliver of total history);
-  *   - `MANIFEST` — the live snapshot version N (atomic cutover, and
-  *     the reason a flush never reads the directory it is writing).
+  *   - `MANIFEST` — the live snapshot version N, the commit point of a
+  *     flush (and the reason a flush never reads the dir it writes);
+  *   - `flush_v<N+1>/` — exists only while a flush runs: its one
+  *     [[Scd2.merge]] pass, written partitioned by [[Scd2.Closed]].
   *
-  * A flush is one [[Scd2.merge]] of the snapshot with the batch: its
-  * rotated versions append to `history/`, the rest is the new snapshot
-  * at `current_v<N+1>`, MANIFEST flips, the old snapshot dir is
-  * deleted. Write volume is O(|current| + |batch|) regardless of how
-  * much history has accumulated. Current-only reads (`date = null`)
-  * never touch `history/` — the union branch is eliminated by a
-  * literal-false filter, so the scan lists only the snapshot directory.
+  * A flush onto snapshot N writes the merge once into `flush_v<N+1>`,
+  * renames its `_closed=false` dir to `current_v<N+1>`, writes
+  * MANIFEST = N+1, moves the `_closed=true` files into `history/`
+  * (Spark's part names carry a per-job UUID, so they never collide),
+  * and deletes `flush_v<N+1>` and `current_v<N>`. Write volume is
+  * O(|current| + |batch|) regardless of how much history has
+  * accumulated. Current-only reads (`date = null`) never touch
+  * `history/` — the union branch is eliminated by a literal-false
+  * filter, so the scan lists only the snapshot directory.
+  *
+  * Crash contract (one writer per `root`, and the few-byte MANIFEST
+  * rewrite taken as atomic, which `fs.create` does not promise): a
+  * flush cut at any point leaves the store reading as exactly before
+  * or exactly after it. [[IncrementalStore.open]] and every flush
+  * first [[recover]]: a
+  * `flush_v<M>` with M = MANIFEST is committed and rolled forward (its
+  * remaining closed files move to `history/`); any other `flush_v<M>`
+  * is discarded, and so is every `current_v<K>` with K != MANIFEST.
+  * A closed row therefore reaches `history/` only after its
+  * replacement snapshot is committed, and only once.
   */
 class IncrementalStore private (
     val spark: SparkSession,
@@ -36,8 +50,18 @@ class IncrementalStore private (
   private def manifestPath = new Path(root, "MANIFEST")
   private def historyPath = new Path(root, "history")
   private def currentPath(v: Long) = new Path(root, s"current_v$v")
+  private def flushPath(v: Long) = new Path(root, s"flush_v$v")
+  private def stagedPart(v: Long, closed: Boolean) =
+    new Path(flushPath(v), s"${Scd2.Closed}=$closed")
 
-  private def readManifest(): Long = {
+  /** The versions `N` of the dirs `<prefix><N>` under `root`. */
+  private def versions(prefix: String): Seq[Long] = {
+    val Versioned = s"$prefix(\\d+)".r
+    fs.listStatus(new Path(root)).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName).collect { case Versioned(n) => n.toLong }
+  }
+
+  private[store] def readManifest(): Long = {
     if (!fs.exists(manifestPath)) 0L
     else {
       val in = fs.open(manifestPath)
@@ -46,7 +70,8 @@ class IncrementalStore private (
     }
   }
 
-  private def writeManifest(v: Long): Unit = {
+  /** Flush step 3, the commit point: MANIFEST = `v`. */
+  private[store] def writeManifest(v: Long): Unit = {
     val out = fs.create(manifestPath, true)
     try out.write(v.toString.getBytes)
     finally out.close()
@@ -93,26 +118,57 @@ class IncrementalStore private (
     this
   }
 
-  /** SCD2 flush: [[Scd2.merge]] of the current snapshot with the batch;
-    * the rotated old versions append to `history/` and the rest becomes
-    * the next snapshot. The first flush writes the batch's latest
-    * version per `_oid` as the snapshot.
+  /** SCD2 flush: ONE [[Scd2.merge]] pass of the current snapshot with
+    * the batch, written once partitioned by [[Scd2.Closed]] into
+    * `flush_v<N+1>`; its open rows become `current_v<N+1>`, MANIFEST
+    * commits, and its rotated old versions move into `history/` (see
+    * the class doc for the steps and the crash contract). A merge with
+    * no rows (empty snapshot, empty batch) commits nothing. The first
+    * flush writes the batch's latest version per `_oid` as the
+    * snapshot.
     */
   def flushUpsert(incoming: DataFrame): IncrementalStore = {
-    val v = readManifest()
-    val nextCurrent = current match {
-      case None => Scd2.latest(incoming)
+    recover()
+    val next = readManifest() + 1
+    current match {
+      case None =>
+        Scd2.latest(incoming).write.mode("overwrite").parquet(currentPath(next).toString)
+        writeManifest(next)
       case Some(curr) =>
-        val merged = Scd2.merge(curr, incoming)
-        merged.filter(col(Scd2.Closed)).drop(Scd2.Closed)
-          .write.mode("append").parquet(historyPath.toString)
-        merged.filter(!col(Scd2.Closed)).drop(Scd2.Closed)
+        stage(curr, incoming, next)
+        if (publish(next)) writeManifest(next)
     }
-    // a FRESH dir (never the one we read), then atomic cutover + cleanup
-    nextCurrent.write.mode("overwrite").parquet(currentPath(v + 1).toString)
-    writeManifest(v + 1)
-    fs.delete(currentPath(v), true)
+    recover()
     this
+  }
+
+  /** Flush step 1: the merge, written once into `flush_v<v>`. */
+  private[store] def stage(curr: DataFrame, incoming: DataFrame, v: Long): Unit =
+    Scd2.merge(curr, incoming).write.mode("overwrite")
+      .partitionBy(Scd2.Closed).parquet(flushPath(v).toString)
+
+  /** Flush step 2: the staged open rows become `current_v<v>`. False if
+    * the merge wrote no open row, which means it wrote no row at all.
+    */
+  private[store] def publish(v: Long): Boolean = {
+    val open = stagedPart(v, closed = false)
+    fs.exists(open) && { StagedSwap.move(fs, open, currentPath(v)); true }
+  }
+
+  /** Flush step 4: the staged closed rows move into `history/`. */
+  private[store] def archive(v: Long): Unit =
+    StagedSwap.moveFiles(fs, stagedPart(v, closed = true), historyPath)
+
+  /** Finish a committed flush, discard an uncommitted one (class doc,
+    * crash contract). The last step of every flush.
+    */
+  private[store] def recover(): Unit = {
+    val v = readManifest()
+    versions("flush_v").foreach { m =>
+      if (m == v) archive(m)
+      fs.delete(flushPath(m), true)
+    }
+    versions("current_v").filter(_ != v).foreach(k => fs.delete(currentPath(k), true))
   }
 }
 
@@ -121,6 +177,7 @@ object IncrementalStore {
     val s = new IncrementalStore(spark, name, root)
     s.fs.mkdirs(new Path(root))
     StagedSwap.restore(s.fs, s.historyPath, StagedSwap.retiredOf(s.historyPath))
+    s.recover()
     s
   }
 }

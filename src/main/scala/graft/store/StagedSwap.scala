@@ -18,6 +18,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Writer exclusion is the caller's: a swap and a [[restore]] of the
   * same dir must not run concurrently.
+  *
+  * Every rename of the store layer goes through here: [[move]] and
+  * [[moveFiles]] are the plain renames a manifest-committed write
+  * ([[IncrementalStore.flushUpsert]]) uses to put its staged output in
+  * place.
   */
 private[graft] object StagedSwap {
 
@@ -34,14 +39,30 @@ private[graft] object StagedSwap {
   def swap(fs: FileSystem, staged: Path, live: Path, retired: Path): Unit = {
     fs.delete(retired, true)
     val hadLive = fs.exists(live)
-    if (hadLive && !fs.rename(live, retired))
-      throw new IllegalStateException(s"staged swap: rename $live -> $retired failed")
+    if (hadLive) move(fs, live, retired)
     if (!fs.rename(staged, live)) {
       if (hadLive) fs.rename(retired, live) // roll back
       throw new IllegalStateException(s"staged swap: rename $staged -> $live failed")
     }
     fs.delete(retired, true)
   }
+
+  /** Rename `from` to `to`, failing loud. `to` must not exist: a
+    * rename onto an existing dir moves `from` inside it.
+    */
+  def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new IllegalStateException(s"rename $from -> $to failed")
+
+  /** Move every file directly under `from` into `to` (made if missing),
+    * keeping its name. Each file is one rename, so a call cut short is
+    * finished by calling it again. No-op if `from` does not exist.
+    */
+  def moveFiles(fs: FileSystem, from: Path, to: Path): Unit =
+    if (fs.exists(from)) {
+      fs.mkdirs(to)
+      fs.listStatus(from).filter(_.isFile)
+        .foreach(f => move(fs, f.getPath, new Path(to, f.getPath.getName)))
+    }
 
   /** Repair a swap cut short by a crash: `retired` with no `live` is
     * the only copy and is moved back; `retired` next to `live` is the
@@ -50,7 +71,6 @@ private[graft] object StagedSwap {
   def restore(fs: FileSystem, live: Path, retired: Path): Unit =
     if (fs.exists(retired)) {
       if (fs.exists(live)) fs.delete(retired, true)
-      else if (!fs.rename(retired, live))
-        throw new IllegalStateException(s"crash recovery: could not restore $retired to $live")
+      else move(fs, retired, live)
     }
 }

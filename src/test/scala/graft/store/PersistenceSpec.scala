@@ -3,6 +3,7 @@ package graft.store
 import graft.SparkSpec
 import graft.model.Meta
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -190,13 +191,29 @@ class ExtensionsSpec extends SparkSpec {
 }
 
 class IncrementalStoreSpec extends SparkSpec {
-  import spark.implicits._
 
-  private def batch(rows: (Long, Double, String)*) =
-    rows.toSeq.toDF("_oid", "_start", "v")
-      .withColumn(Meta.END, lit(null).cast(DoubleType))
-      .withColumn(Meta.HASH, Meta.contentHashOf("v" -> col("v")))
-      .withColumn(Meta.ID, Meta.genId(col("_oid"), col("_start"), col(Meta.END)))
+  private def wrap(df: DataFrame): DataFrame = df
+    .withColumn(Meta.END, lit(null).cast(DoubleType))
+    .withColumn(Meta.HASH, Meta.contentHashOf("v" -> col("v")))
+    .withColumn(Meta.ID, Meta.genId(col("_oid"), col("_start"), col(Meta.END)))
+
+  private def batchIn(s: SparkSession, rows: Seq[(Long, Double, String)]): DataFrame =
+    wrap(s.createDataFrame(rows).toDF("_oid", "_start", "v"))
+
+  private def batch(rows: (Long, Double, String)*): DataFrame = batchIn(spark, rows)
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.select("_oid", "_start", "_end", "v", "_hash", "_id").collect().map(_.toString).toSeq.sorted
+
+  private def parquetFiles(dir: java.nio.file.Path): Int =
+    Option(dir.toFile.listFiles()).fold(0)(_.count(_.getName.endsWith(".parquet")))
+
+  /** The dirs under `root` a flush may leave: none staged, one snapshot. */
+  private def assertClean(root: java.nio.file.Path): Unit = {
+    val names = root.toFile.listFiles().filter(_.isDirectory).map(_.getName)
+    assert(!names.exists(_.startsWith("flush_v")), names.mkString(","))
+    assert(names.count(_.startsWith("current_v")) == 1, names.mkString(","))
+  }
 
   test("append-only history + snapshot replacement across flushes") {
     val root = java.nio.file.Files.createTempDirectory("graft-inc").resolve("t").toString
@@ -216,15 +233,106 @@ class IncrementalStoreSpec extends SparkSpec {
     assert(hist(0).getAs[String]("_id") == "1:10.0")
     assert(s.df.count() == 4)
 
-    // flush 3: idempotent re-flush adds nothing
-    val historyFiles = new java.io.File(root, "history").listFiles().count(_.getName.endsWith(".parquet"))
+    // flush 3: idempotent re-flush adds nothing, not even an empty file
+    val historyFiles = parquetFiles(java.nio.file.Paths.get(root, "history"))
     s.flushUpsert(batch((1L, 30.0, "b"), (2L, 30.0, "x"), (3L, 30.0, "n")))
     assert(s.df.count() == 4)
+    assert(parquetFiles(java.nio.file.Paths.get(root, "history")) == historyFiles)
     assert(s.currentDf.filter(col("_oid") === 1L).head().getAs[Double]("_start") == 20.0)
 
     // current-only read never lists the history directory
     val plan = s.currentDf.queryExecution.executedPlan.toString
     assert(plan.contains("current_v") && !plan.contains("history"))
+  }
+
+  test("an empty batch onto a snapshot leaves snapshot and history as they were") {
+    val root = Files.createTempDirectory("graft-inc-empty").resolve("t")
+    val s = IncrementalStore.open(spark, "t", root.toString)
+    s.flushUpsert(batch((1L, 10.0, "a"), (2L, 10.0, "x")))
+    s.flushUpsert(batch((1L, 20.0, "b")))
+    val (cur, hist) = (rows(s.currentDf), rows(s.history.get))
+    val historyFiles = parquetFiles(root.resolve("history"))
+    s.flushUpsert(batch())
+    assert(rows(s.currentDf) == cur && rows(s.history.get) == hist)
+    assert(parquetFiles(root.resolve("history")) == historyFiles)
+    assertClean(root)
+  }
+
+  test("an empty batch onto a 0-row snapshot commits nothing and stays readable") {
+    val root = Files.createTempDirectory("graft-inc-none").resolve("t")
+    val s = IncrementalStore.open(spark, "t", root.toString)
+    s.flushUpsert(batch())
+    val columns = s.currentDf.columns.toSeq
+    assert(s.currentDf.count() == 0 && s.history.isEmpty)
+    val v = s.readManifest()
+    // the merge has no rows, so the partitioned write makes no partition dir
+    s.stage(s.currentDf, batch(), v + 1)
+    assert(!Files.exists(root.resolve(s"flush_v${v + 1}").resolve(s"${Scd2.Closed}=false")))
+    s.recover()
+    s.flushUpsert(batch())
+    assert(s.readManifest() == v)
+    assert(s.currentDf.columns.toSeq == columns && s.currentDf.count() == 0)
+    assert(s.history.isEmpty && s.df.count() == 0)
+    assertClean(root)
+  }
+
+  test("one flush onto a snapshot computes each incoming row once") {
+    val root = Files.createTempDirectory("graft-inc-once").resolve("t").toString
+    val s = IncrementalStore.open(spark, "t", root)
+    s.flushUpsert(batch((0L, 10.0, "v0"), (1L, 10.0, "x")))
+    val computed = spark.sparkContext.longAccumulator("incoming rows computed")
+    val counted = udf { (v: String) => computed.add(1); v }.asNondeterministic()
+    val n = 50
+    val incoming = wrap(spark.range(n).select(col("id").as("_oid"), lit(20.0).as("_start"),
+      counted(concat(lit("v"), (col("id") % 3).cast(StringType))).as("v")))
+    s.flushUpsert(incoming)
+    assert(computed.sum == n, s"the batch was computed ${computed.sum.toDouble / n} times")
+    // oid 0 is unchanged, oid 1 rotates
+    assert(s.currentDf.count() == n && s.history.get.count() == 1)
+  }
+
+  test("a flush cut after any step reopens as exactly before or after it") {
+    // no coalescing: several write tasks, so several closed-row files
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val oids = 1L to 8L
+    val a = batchIn(ss, oids.map(o => (o, 10.0, s"a$o")))
+    val b = batchIn(ss, oids.map(o => (o, 20.0, s"b$o")) :+ ((9L, 20.0, "n9")))
+    val c = batchIn(ss, oids.map(o => (o, 30.0, s"c$o")) :+ ((10L, 30.0, "n10")))
+    def seeded(tag: String) = {
+      val root = Files.createTempDirectory(s"graft-inc-cut-$tag").resolve("t")
+      (root, IncrementalStore.open(ss, "t", root.toString).flushUpsert(a).flushUpsert(b))
+    }
+    val before = rows(seeded("before")._2.df)
+    val after = rows(seeded("after")._2.flushUpsert(c).df)
+    assert(before.length == 17 && after.length == 26)
+
+    def archiveOne(root: java.nio.file.Path, v: Long): Unit = {
+      val staged = root.resolve(s"flush_v$v").resolve(s"${Scd2.Closed}=true").toFile
+        .listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(staged.length >= 2, "the cut needs a closed file left to move")
+      Files.move(staged.head.toPath, root.resolve("history").resolve(staged.head.getName))
+    }
+    // the flush's steps in order; MANIFEST commits at the third
+    val steps = Seq[(String, (IncrementalStore, java.nio.file.Path, Long) => Unit)](
+      ("stage", (s, _, v) => s.stage(s.currentDf, c, v)),
+      ("publish", (s, _, v) => s.publish(v)),
+      ("commit", (s, _, v) => s.writeManifest(v)),
+      ("one closed file archived", (_, root, v) => archiveOne(root, v)),
+      ("archive", (s, _, v) => s.archive(v)))
+    for (k <- 1 to steps.length) {
+      val cut = steps(k - 1)._1
+      val (root, s) = seeded(cut.replace(' ', '-'))
+      val v = s.readManifest() + 1
+      steps.take(k).foreach(_._2(s, root, v))
+      val reopened = IncrementalStore.open(ss, "t", root.toString)
+      assert(rows(reopened.df) == (if (k >= 3) after else before), s"cut after $cut")
+      val keys = reopened.df.select("_oid", "_start").collect().toSeq
+      assert(keys.distinct.length == keys.length, s"duplicate (_oid, _start) after $cut")
+      assertClean(root)
+      // the batch flushed again after recovery: no closed row twice
+      assert(rows(reopened.flushUpsert(c).df) == after, s"re-flush after $cut")
+    }
   }
 
   test("a compaction cut between its two renames is restored by open") {

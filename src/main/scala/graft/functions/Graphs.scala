@@ -1,9 +1,10 @@
 package graft.functions
 
-import scala.collection.mutable
-import scala.reflect.ClassTag
+import java.util.Arrays
 
-import org.apache.spark.{HashPartitioner, Partitioner}
+import scala.collection.mutable
+
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -22,16 +23,24 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * '''Round shape of the iterative operators''' ([[pageRank]],
   * [[weightedPageRank]], [[personalizedPageRank]], [[labelPropagation]],
   * [[kCoreRounds]], [[kCore]]): a DataFrame goes in and a DataFrame
-  * comes out, but inside, the canonicalized edges become ONE key-value
-  * vertex table `(node, adjacency)`, hash-partitioned once by
-  * `HashPartitioner(spark.sql.shuffle.partitions)` and pinned. A round
-  * is a narrow join of that table with the previous round's per-node
-  * state (both sides on the same partitioner, so no shuffle) plus one
-  * map-side-combined shuffle back onto the partitioner (label
-  * propagation: two). The rounds are therefore stages of a single
-  * Spark job — no Catalyst planning and no AQE re-planning between
-  * rounds, and no blocking job per round; only [[kCore]] runs one
-  * action per round, its fixpoint test. Integer arithmetic uses
+  * comes out, but inside, the canonicalized edges become ONE vertex
+  * block per partition (`spark.sql.shuffle.partitions` of them): the
+  * partition's node ids, sorted, their out-edges in compressed-sparse-
+  * row arrays and an open-addressing index from id to slot. One hash
+  * of a node's id picks its partition, in the build and in every
+  * round. The blocks are built by one shuffle straight from the edge
+  * rows and pinned. A round's state is one `Array[Long]` per partition
+  * aligned with the block's ids, so reading the previous round is a
+  * narrow zip of arrays. A round's messages are summed per target node
+  * on the sending side, in one primitive hash table per target
+  * partition, and shipped as one record of columns per target
+  * partition (label propagation: two such shuffles); the receiving
+  * side adds them into an aligned array through the index. A map task
+  * thus writes at most one shuffle record per partition, and no object
+  * per edge or node is made. The rounds are stages of a single Spark
+  * job — no Catalyst planning and no AQE re-planning between rounds,
+  * and no blocking job per round; only [[kCore]] runs one action per
+  * round, its fixpoint test. Integer arithmetic uses
   * `Math.addExact`/`multiplyExact`, so an overflow fails loudly as
   * ANSI SQL arithmetic does. [[hits]] and [[triangleCounts]] are
   * DataFrame pipelines.
@@ -75,125 +84,184 @@ object Graphs {
       s"unit must be one of auto|${Units.map(_._1).mkString("|")}, got $unit")
   }
 
-  /** The vertex-table partitioner: `spark.sql.shuffle.partitions` hash
-    * buckets of the edge frame's session.
-    */
-  private def partitioner(df: DataFrame): Partitioner =
-    new HashPartitioner(df.sparkSession.sessionState.conf.numShufflePartitions)
+  /** A shuffle record's payload: columns of longs, one value per row. */
+  private type Cols = Array[Array[Long]]
 
-  /** The named columns of `df` cast to BIGINT, rows with a null
-    * dropped, as an RDD — a narrow projection, so it plans no shuffle
-    * of its own.
+  /** One partition of a graph: its node ids (sorted), the out-edges of
+    * node `ids(i)` at `nbrs(offs(i) until offs(i + 1))` (sorted,
+    * distinct) with their summed `weights` (empty for an unweighted
+    * graph), and the index from id to slot.
     */
-  private def longRows(df: DataFrame, cols: String*): RDD[Array[Long]] = {
-    val n = cols.length
-    df.select(cols.map(c => col(c).cast("long")): _*).na.drop()
-      .queryExecution.toRdd.map(r => Array.tabulate(n)(r.getLong))
+  private final class Block(val ids: Array[Long], val index: LongTable,
+      val offs: Array[Int], val nbrs: Array[Long], val weights: Array[Long])
+      extends Serializable {
+    def size: Int = ids.length
+    def degree(i: Int): Int = offs(i + 1) - offs(i)
   }
 
-  /** `(node, out-neighbour -> summed weight)` for every endpoint of the
-    * weighted edges `e` (sinks get an empty table), partitioned by
-    * `part`. The map-side combine collapses duplicate edges before the
-    * shuffle.
+  /** The partition of node `id`: the one hash of an id, used by the
+    * block build and by every round.
     */
-  private def vertexTable(e: RDD[(Long, Long, Long)], part: Partitioner)
-      : RDD[(Long, mutable.LongMap[Long])] = {
-    def add(m: mutable.LongMap[Long], v: Option[(Long, Long)]): mutable.LongMap[Long] = {
-      v.foreach { case (d, w) => m.update(d, Math.addExact(m.getOrElse(d, 0L), w)) }
-      m
+  private def owner(id: Long, parts: Int): Int =
+    Math.floorMod(java.lang.Long.hashCode(id), parts)
+
+  /** Routes a `(partition, payload)` record to that partition. */
+  private final class ToPartition(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  private def shuffled(sent: RDD[(Int, Cols)], parts: Int): RDD[Cols] =
+    sent.partitionBy(new ToPartition(parts)).values
+
+  /** A map task's pre-combined output: one `(partition, columns)` record
+    * per target partition whose table got an entry.
+    */
+  private def posted(tables: Array[LongTable]): Iterator[(Int, Cols)] =
+    tables.indices.iterator.filter(tables(_).size > 0).map(p => (p, tables(p).columns))
+
+  /** The vertex blocks of `edges`, one per `spark.sql.shuffle.partitions`
+    * partition, built by one shuffle. Rows with a null endpoint (or
+    * weight) drop. Each map task buckets its edges into primitive
+    * columns, one set per target partition; the reducer builds the
+    * CSR and sorts and dedupes each node's slice. Directed (`undirected
+    * = false`): every endpoint is a node, sinks with an empty slice;
+    * with a `weightCol`, parallel edges sum their weights
+    * (`Math.addExact`). Undirected: self loops drop and each edge is
+    * kept in both directions, so every node has a neighbour.
+    */
+  private def blocks(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], undirected: Boolean): RDD[Block] = {
+    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val weighted = weightCol.isDefined
+    val rows = edges.select((Seq(srcCol, dstCol) ++ weightCol).map(c => col(c).cast("long")): _*)
+      .na.drop().queryExecution.toRdd
+    // per target partition: src, dst, weight, endpoints with no edge here
+    val sent = rows.mapPartitions { it =>
+      val out = Array.fill(parts, 4)(new mutable.ArrayBuilder.ofLong)
+      def edge(s: Long, d: Long, w: Long): Unit = {
+        val o = out(owner(s, parts))
+        o(0) += s; o(1) += d
+        if (weighted) o(2) += w
+      }
+      it.foreach { r =>
+        val (s, d) = (r.getLong(0), r.getLong(1))
+        if (!undirected) {
+          edge(s, d, if (weighted) r.getLong(2) else 0L)
+          out(owner(d, parts))(3) += d
+        } else if (s != d) { edge(s, d, 0L); edge(d, s, 0L) }
+      }
+      out.indices.iterator.filter(p => out(p).exists(_.length > 0))
+        .map(p => (p, out(p).map(_.result())))
     }
-    e.flatMap { case (s, d, w) => Iterator((s, Option((d, w))), (d, None)) }
-      .combineByKey[mutable.LongMap[Long]](
-        v => add(mutable.LongMap.empty[Long], v), add,
-        (a, b) => { b.foreachEntry((d, w) => add(a, Some((d, w)))); a }, part)
+    shuffled(sent, parts).mapPartitions(it => Iterator(block(it.toArray, weighted)))
   }
 
-  /** Directed vertex table: every endpoint with its distinct
-    * out-neighbours (null endpoints dropped, duplicates collapsed).
-    */
-  private def outNeighbours(edges: DataFrame, srcCol: String, dstCol: String,
-      part: Partitioner): RDD[(Long, Array[Long])] =
-    vertexTable(longRows(edges, srcCol, dstCol).map(a => (a(0), a(1), 1L)), part)
-      .mapValues(_.keys.toArray)
+  /** The CSR block of one partition's received edge columns. */
+  private def block(recs: Array[Cols], weighted: Boolean): Block = {
+    def concat(c: Int): Array[Long] = recs.flatMap(_(c))
+    val (src, dst, ws) = (concat(0), concat(1), concat(2))
+    val seen = new LongTable(1, 0, src.length)
+    (src ++ concat(3)).foreach(seen.slot(_))
+    val ids = seen.columns(0)
+    Arrays.sort(ids)
+    val n = ids.length
+    val index = LongTable.of(ids)
+    val slotOf = src.map(index.find(_))
+    val offs = new Array[Int](n + 1)
+    slotOf.foreach(i => offs(i + 1) += 1)
+    for (i <- 0 until n) offs(i + 1) += offs(i)
+    val fill = Arrays.copyOf(offs, n)
+    val nbrs = new Array[Long](src.length)
+    val w = new Array[Long](ws.length)
+    for (e <- src.indices) {
+      val p = fill(slotOf(e))
+      nbrs(p) = dst(e)
+      if (weighted) w(p) = ws(e)
+      fill(slotOf(e)) += 1
+    }
+    // dedupe (summing weights) and sort each slice, compacting in place
+    var end = 0
+    for (i <- 0 until n) {
+      val (from, to) = (offs(i), offs(i + 1))
+      offs(i) = end
+      val sums = new LongTable(1, 1, to - from)
+      for (j <- from until to) sums.add(0, sums.slot(nbrs(j)), if (weighted) w(j) else 0L)
+      val ks = sums.columns(0)
+      Arrays.sort(ks)
+      for (k <- ks) {
+        nbrs(end) = k
+        if (weighted) w(end) = sums.value(0, sums.find(k))
+        end += 1
+      }
+    }
+    offs(n) = end
+    new Block(ids, index, offs, Arrays.copyOf(nbrs, end), Arrays.copyOf(w, math.min(end, w.length)))
+  }
 
-  /** Undirected vertex table: null rows and self loops dropped,
-    * duplicates collapsed, each edge kept in both directions — every
-    * node has at least one neighbour.
+  /** One message shuffle of a round: each partition calls
+    * `emit(block, state, send)`, and `send(node, v)` adds `v` into the
+    * sending task's sum for `node` (one [[LongTable]] per target
+    * partition), shipped as one record per target partition. Returns
+    * each node's received sum (0 if nothing was sent to it), aligned
+    * with `blocks`.
     */
-  private def neighbours(edges: DataFrame, srcCol: String, dstCol: String,
-      part: Partitioner): RDD[(Long, Array[Long])] =
-    vertexTable(longRows(edges, srcCol, dstCol)
-      .filter(a => a(0) != a(1))
-      .flatMap(a => Iterator((a(0), a(1), 1L), (a(1), a(0), 1L))), part)
-      .mapValues(_.keys.toArray)
-
-  /** Narrow hash join of two RDDs on the same partitioner: each
-    * `(node, v)` of `left` meets `right`'s value for the node, if any.
-    * Partition i of both sides holds the same keys, so the partitions
-    * zip and one side's partition is held in a hash map — no shuffle.
-    */
-  private def localJoin[V, X](left: RDD[(Long, V)], right: RDD[(Long, X)])
-      : RDD[(Long, (V, Option[X]))] = {
-    require(left.partitioner.isDefined && left.partitioner == right.partitioner,
-      "localJoin needs both sides on the same partitioner")
-    left.zipPartitions(right, preservesPartitioning = true) { (ls, rs) =>
-      val m = mutable.LongMap.empty[X] ++= rs
-      ls.map { case (n, v) => (n, (v, m.get(n))) }
+  private def exchange(blocks: RDD[Block], state: RDD[Array[Long]])(
+      emit: (Block, Array[Long], (Long, Long) => Unit) => Unit): RDD[Array[Long]] = {
+    val parts = blocks.getNumPartitions
+    val sent = blocks.zipPartitions(state) { (bs, ss) =>
+      val b = bs.next()
+      val sums = Array.fill(parts)(new LongTable(1, 1, b.nbrs.length / parts + 16))
+      emit(b, ss.next(), (t, v) => { val m = sums(owner(t, parts)); m.add(0, m.slot(t), v) })
+      posted(sums)
+    }
+    blocks.zipPartitions(shuffled(sent, parts)) { (bs, msgs) =>
+      val b = bs.next()
+      val c = new Array[Long](b.size)
+      msgs.foreach { case Array(ts, vs) =>
+        for (j <- ts.indices) {
+          val i = b.index.find(ts(j))
+          c(i) = Math.addExact(c(i), vs(j))
+        }
+      }
+      Iterator(c)
     }
   }
 
-  /** `reduceByKey(part, f)` with both combine sides in plain hash maps:
-    * the shuffle itself carries no aggregator, so Spark's size-tracking
-    * combine maps never sample the records, and below 200 partitions
-    * the bypass-merge writer runs. A partition's map holds its distinct
-    * keys in memory.
-    */
-  private def combine[K: ClassTag, V: ClassTag](kv: RDD[(K, V)], part: Partitioner)(
-      f: (V, V) => V): RDD[(K, V)] = {
-    def local(it: Iterator[(K, V)]): Iterator[(K, V)] = {
-      val m = mutable.HashMap.empty[K, V]
-      it.foreach { case (k, v) => m.updateWith(k)(a => Some(a.fold(v)(f(_, v)))) }
-      m.iterator
-    }
-    kv.mapPartitions(local).partitionBy(part).mapPartitions(local, preservesPartitioning = true)
-  }
-
-  /** `iterations` synchronous rounds of a fixed-point walk over the
-    * pinned vertex table `vertices`:
+  /** `iterations` synchronous rounds of the damped walk over `blocks`,
+    * `seeds(v)` being 1 for a seed node and 0 otherwise:
     *
-    * {{{ r₀(v) = init(v),   rᵢ₊₁(v) = next(v, Σ contributions into v) }}}
+    * {{{ r₀(v) = seeds(v)·u,   rᵢ₊₁(v) = seeds(v)·base + (d · Σ contributions into v) div 1000 }}}
     *
-    * where a node of rank `r` sends `emit(v, r)`; a node nothing sends
-    * to reads a sum of 0. Each round is one narrow join of `vertices`
-    * with the previous round's sums plus one [[combine]] onto `part`.
-    * Every `pinEvery`-th round's sums are pinned as they are computed,
-    * so a lost block recomputes at most `pinEvery` rounds, and no round
-    * waits on a job. Returns the final `(node, rank)` RDD, not yet
-    * computed, and the pins it holds.
+    * where `send(block, slot, r, out)` sends the contributions of a
+    * node of rank `r > 0` with out-edges (a zero rank sends nothing: it
+    * would send zeros). Each round is one [[exchange]]. Every `pinEvery`-th
+    * round's ranks are pinned as they are computed, so a lost block
+    * recomputes at most `pinEvery` rounds, and no round waits on a job.
+    * Returns the final ranks, not yet computed, and the pins they hold.
     */
-  private def walk[V: ClassTag](
-      vertices: RDD[(Long, V)],
-      part: Partitioner,
-      iterations: Int,
-      pinEvery: Int,
-      init: V => Long,
-      next: (V, Long) => Long,
-      emit: (V, Long) => Iterator[(Long, Long)]): (RDD[(Long, Long)], Set[Int]) = {
-    def ranks(sums: Option[RDD[(Long, Long)]]): RDD[(Long, (V, Long))] = sums match {
-      case None => vertices.mapValues(v => (v, init(v)))
-      case Some(s) => localJoin(vertices, s)
-        .mapValues { case (v, c) => (v, next(v, c.getOrElse(0L))) }
-    }
-    var sums: Option[RDD[(Long, Long)]] = None
+  private def walk(blocks: RDD[Block], seeds: RDD[Array[Long]], iterations: Int,
+      pinEvery: Int, u: Long, base: Long, d: Long)(
+      send: (Block, Int, Long, (Long, Long) => Unit) => Unit): (RDD[Array[Long]], Set[Int]) = {
+    var ranks = seeds.map(_.map(_ * u))
     var pins = Set.empty[Int]
     for (i <- 1 to iterations) {
-      val (s, ids) = pinRound(combine(ranks(sums).values.flatMap { case (v, r) => emit(v, r) },
-        part)(Math.addExact(_: Long, _: Long)), i, iterations, pinEvery)
-      sums = Some(s)
+      val sums = exchange(blocks, ranks) { (b, r, out) =>
+        for (v <- 0 until b.size) if (r(v) != 0L && b.degree(v) > 0) send(b, v, r(v), out)
+      }
+      val (next, ids) = pinRound(sums.zipPartitions(seeds) { (cs, ss) =>
+        val (c, s) = (cs.next(), ss.next())
+        Iterator(Array.tabulate(c.length)(v =>
+          Math.addExact(s(v) * base, Math.multiplyExact(d, c(v)) / 1000L)))
+      }, i, iterations, pinEvery)
+      ranks = next
       pins ++= ids
     }
-    (ranks(sums).mapValues(_._2), pins)
+    (ranks, pins)
   }
+
+  /** Every node a seed: the global walk's seed flags. */
+  private def allSeeds(blocks: RDD[Block]): RDD[Array[Long]] =
+    blocks.map(b => Array.fill(b.size)(1L))
 
   /** Pin round `i`'s state when `i` is a `pinEvery`-th round before the
     * last one (the last round's output is pinned by [[result]]).
@@ -202,22 +270,23 @@ object Graphs {
       pinEvery: Int): (RDD[T], Set[Int]) =
     if (i % pinEvery == 0 && i < iterations) Pins.pinRdd(state) else (state, Set.empty)
 
-  /** Pin `values` and run the ONE job that computes it — every round
-    * still pending becomes a stage of that job — then release `held`
-    * and return `(node, <field>)` over the pinned values, with the pin
-    * registered for [[unpin]]. `node` is nullable exactly when an
-    * endpoint column of `edges` is, as the result schema has always
-    * carried it.
+  /** Pin the `(node ids, values)` columns `out` and run the ONE job
+    * that computes them — every round still pending becomes a stage of
+    * that job — then release `held` and return `(node, <field>)` over
+    * the pinned columns, with the pin registered for [[unpin]]. `node`
+    * is nullable exactly when an endpoint column of `edges` is, as the
+    * result schema has always carried it.
     */
   private def result(edges: DataFrame, srcCol: String, dstCol: String,
-      values: RDD[(Long, Long)], field: StructField, held: Set[Int]): DataFrame = {
+      out: RDD[(Array[Long], Array[Long])], field: StructField, held: Set[Int]): DataFrame = {
     val spark = edges.sparkSession
-    val (out, outPins) = Pins.pinRdd(values)
-    out.count()
+    val (pinned, outPins) = Pins.pinRdd(out)
+    pinned.count()
     Pins.release(spark.sparkContext, held)
     val nodeNullable = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
       .schema.exists(_.nullable)
-    val df = spark.createDataFrame(out.map { case (n, x) => Row(n, x) },
+    val df = spark.createDataFrame(
+      pinned.flatMap { case (ns, xs) => ns.indices.iterator.map(i => Row(ns(i), xs(i))) },
       StructType(Seq(StructField("node", LongType, nodeNullable), field)))
     Pins.register(df, outPins)
     df
@@ -242,10 +311,18 @@ object Graphs {
     * multiply by `10^(9-digits)`) so the output schema is unit-agnostic.
     */
   private def rankResult(edges: DataFrame, srcCol: String, dstCol: String,
-      ranks: RDD[(Long, Long)], digits: Int, held: Set[Int]): DataFrame = {
+      blocks: RDD[Block], ranks: RDD[Array[Long]], digits: Int, held: Set[Int]): DataFrame = {
     val toNano = math.pow(10, 9 - digits).toLong
-    result(edges, srcCol, dstCol, ranks.mapValues(Math.multiplyExact(_, toNano)),
-      StructField("rank_nano", LongType), held)
+    val out = blocks.zipPartitions(ranks) { (bs, rs) =>
+      Iterator((bs.next().ids, rs.next().map(Math.multiplyExact(_, toNano))))
+    }
+    result(edges, srcCol, dstCol, out, StructField("rank_nano", LongType), held)
+  }
+
+  /** A node's out-edges split its rank evenly (truncating). */
+  private def evenSplit(b: Block, v: Int, r: Long, out: (Long, Long) => Unit): Unit = {
+    val q = r / b.degree(v)
+    for (j <- b.offs(v) until b.offs(v + 1)) out(b.nbrs(j), q)
   }
 
   /** Fixed-iteration PageRank in integer fixed-point units —
@@ -280,11 +357,11 @@ object Graphs {
     * `"nano"|"micro"` is validated against the same bounds and fails
     * loud.
     *
-    * Jobs: one setup job builds and pins the vertex table
-    * `(node, out-neighbours)` and counts its nodes for the unit
-    * choice; one more runs all `iterations` rounds (one shuffle each,
-    * see [[Graphs]]) and pins the result. `pinEvery` bounds how far
-    * back a lost block recomputes; it adds no job.
+    * Jobs: one setup job builds and pins the vertex blocks and counts
+    * their nodes for the unit choice; one more runs all `iterations`
+    * rounds (one shuffle each, see [[Graphs]]) and pins the result.
+    * `pinEvery` bounds how far back a lost block recomputes; it adds
+    * no job.
     *
     * @return `(node bigint, rank_nano bigint)` — one row per distinct
     *         endpoint of `edges`.
@@ -298,9 +375,8 @@ object Graphs {
       pinEvery: Int = 1,
       unit: String = "auto"): DataFrame = {
     requireWalk(iterations, dampingPerMille, pinEvery, unit)
-    val part = partitioner(edges)
-    val (adj, adjPins) = Pins.pinRdd(outNeighbours(edges, srcCol, dstCol, part))
-    val nNodes = adj.count()
+    val (blk, blkPins) = Pins.pinRdd(blocks(edges, srcCol, dstCol, None, undirected = false))
+    val nNodes = blk.map(_.size.toLong).fold(0L)(_ + _)
     require(nNodes < MaxNodes,
       s"pageRank: $nNodes nodes exceed the ~9e9 cap from the rank_nano " +
         "output bound (rank * 1e9 must stay under 2^63)")
@@ -311,12 +387,9 @@ object Graphs {
         s"damping multiply (bound $bound node·damping) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
     val d = dampingPerMille.toLong
-    val base = (1000L - d) * (u / 1000L)
-    val (ranks, pins) = walk[Array[Long]](adj, part, iterations, pinEvery,
-      init = _ => u,
-      next = (_, c) => Math.addExact(base, Math.multiplyExact(d, c) / 1000L),
-      emit = (out, r) => out.iterator.map(t => (t, r / out.length)))
-    rankResult(edges, srcCol, dstCol, ranks, digits, adjPins ++ pins)
+    val (ranks, pins) = walk(blk, allSeeds(blk), iterations, pinEvery,
+      u, (1000L - d) * (u / 1000L), d)(evenSplit)
+    rankResult(edges, srcCol, dstCol, blk, ranks, digits, blkPins ++ pins)
   }
 
   /** Release the cached blocks behind a [[pageRank]] result; no-op
@@ -342,8 +415,8 @@ object Graphs {
     * multiplicity semantics the unweighted walk's `distinct`
     * deliberately discards); null endpoints/weights drop.
     *
-    * Job shape identical to [[pageRank]], over a vertex table
-    * `(node, out-neighbours, weights, W)`.
+    * Job shape identical to [[pageRank]], over blocks that carry each
+    * out-edge's summed weight.
     */
   def weightedPageRank(
       edges: DataFrame,
@@ -355,20 +428,19 @@ object Graphs {
       pinEvery: Int = 1,
       unit: String = "auto"): DataFrame = {
     requireWalk(iterations, dampingPerMille, pinEvery, unit)
-    val part = partitioner(edges)
-    val (adj, adjPins) = Pins.pinRdd(
-      vertexTable(longRows(edges, srcCol, dstCol, weightCol).map(a => (a(0), a(1), a(2))), part)
-        .mapValues { m =>
-          val (out, ws) = m.toArray.unzip
-          (out, ws, ws.foldLeft(0L)(Math.addExact(_: Long, _: Long)))
-        })
-    // (nodes, merged edges, min weight, max weight) in the setup job
-    val (nNodes, nEdges, minW, maxW) = adj.values.aggregate((0L, 0L, Long.MaxValue, Long.MinValue))(
-      { case ((n, m, lo, hi), (_, ws, _)) =>
-        (n + 1, m + ws.length, math.min(lo, ws.minOption.getOrElse(lo)),
-          math.max(hi, ws.maxOption.getOrElse(hi))) },
-      { case ((n1, m1, lo1, hi1), (n2, m2, lo2, hi2)) =>
-        (n1 + n2, m1 + m2, math.min(lo1, lo2), math.max(hi1, hi2)) })
+    val (blk, blkPins) = Pins.pinRdd(
+      blocks(edges, srcCol, dstCol, Some(weightCol), undirected = false))
+    def total(b: Block, v: Int): Long =
+      (b.offs(v) until b.offs(v + 1)).foldLeft(0L)((t, j) => Math.addExact(t, b.weights(j)))
+    // (nodes, merged edges, min weight, max weight) in the setup job,
+    // which also fails loud if a node's total weight overflows
+    val (nNodes, nEdges, minW, maxW) = blk.map { b =>
+      (0 until b.size).foreach(total(b, _))
+      (b.size.toLong, b.weights.length.toLong, b.weights.minOption.getOrElse(Long.MaxValue),
+        b.weights.maxOption.getOrElse(Long.MinValue))
+    }.fold((0L, 0L, Long.MaxValue, Long.MinValue)) { case ((n1, m1, lo1, hi1), (n2, m2, lo2, hi2)) =>
+      (n1 + n2, m1 + m2, math.min(lo1, lo2), math.max(hi1, hi2))
+    }
     require(nNodes < MaxNodes,
       s"weightedPageRank: $nNodes nodes exceed the ~9e9 cap from the " +
         "rank_nano output bound")
@@ -383,13 +455,13 @@ object Graphs {
         s"overflow the $name unit (bound $bound) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
     val d = dampingPerMille.toLong
-    val base = (1000L - d) * (u / 1000L)
-    val (ranks, pins) = walk[(Array[Long], Array[Long], Long)](adj, part, iterations, pinEvery,
-      init = _ => u,
-      next = (_, c) => Math.addExact(base, Math.multiplyExact(d, c) / 1000L),
-      emit = { case ((out, ws, total), r) =>
-        out.indices.iterator.map(j => (out(j), Math.multiplyExact(r, ws(j)) / total)) })
-    rankResult(edges, srcCol, dstCol, ranks, digits, adjPins ++ pins)
+    val (ranks, pins) = walk(blk, allSeeds(blk), iterations, pinEvery,
+      u, (1000L - d) * (u / 1000L), d) { (b, v, r, out) =>
+      val w = total(b, v)
+      for (j <- b.offs(v) until b.offs(v + 1))
+        out(b.nbrs(j), Math.multiplyExact(r, b.weights(j)) / w)
+    }
+    rankResult(edges, srcCol, dstCol, blk, ranks, digits, blkPins ++ pins)
   }
 
   /** Personalized PageRank — [[pageRank]] with the teleport mass
@@ -419,8 +491,10 @@ object Graphs {
     * Only nodes with a non-zero rank send contributions, so early
     * rounds shuffle only the reached FRONTIER (seeds, then their k-hop
     * neighborhood) — integer-exact (a zero rank contributes zero) and
-    * what makes seeded walks cheap on web-scale graphs. The seed flag
-    * rides the vertex table; the job shape is [[pageRank]]'s.
+    * what makes seeded walks cheap on web-scale graphs. The seed ids
+    * reach their blocks by one more shuffle in the setup job, as a
+    * pinned 0/1 flag array per partition; the job shape is
+    * [[pageRank]]'s.
     *
     * @param seeds frame whose `seedCol` holds the seed node ids;
     *              ids not present in the graph are ignored.
@@ -438,12 +512,22 @@ object Graphs {
       pinEvery: Int = 1,
       unit: String = "auto"): DataFrame = {
     requireWalk(iterations, dampingPerMille, pinEvery, unit)
-    val part = partitioner(edges)
-    val seedIds = combine(longRows(seeds, seedCol).map(a => (a(0), ())), part)((a, _) => a)
-    val (adj, adjPins) = Pins.pinRdd(localJoin(outNeighbours(edges, srcCol, dstCol, part), seedIds)
-      .mapValues { case (out, s) => (out, s.isDefined) })
+    val (blk, blkPins) = Pins.pinRdd(blocks(edges, srcCol, dstCol, None, undirected = false))
+    val parts = blk.getNumPartitions
+    val sent = seeds.select(col(seedCol).cast("long")).na.drop().queryExecution.toRdd
+      .mapPartitions { it =>
+        val out = Array.fill(parts)(new LongTable(1, 0, 16))
+        it.foreach { r => val s = r.getLong(0); out(owner(s, parts)).slot(s) }
+        posted(out)
+      }
+    val (flags, flagPins) = Pins.pinRdd(blk.zipPartitions(shuffled(sent, parts)) { (bs, recs) =>
+      val b = bs.next()
+      val f = new Array[Long](b.size)
+      recs.foreach(_(0).foreach { s => val v = b.index.find(s); if (v >= 0) f(v) = 1L })
+      Iterator(f)
+    })
     // the ladder bounds scale with SEED mass, not graph size
-    val nSeeds = adj.filter(_._2._2).count()
+    val nSeeds = flags.map(_.sum).fold(0L)(_ + _)
     require(nSeeds >= 1, "personalizedPageRank: no seed id occurs in the graph")
     require(nSeeds < MaxNodes,
       s"personalizedPageRank: $nSeeds seeds exceed the ~9e9 cap from the " +
@@ -453,14 +537,9 @@ object Graphs {
         s"$name-unit damping multiply (bound $bound seed·damping) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
     val d = dampingPerMille.toLong
-    val baseSeed = (1000L - d) * (u / 1000L)
-    val (ranks, pins) = walk[(Array[Long], Boolean)](adj, part, iterations, pinEvery,
-      init = v => if (v._2) u else 0L,
-      next = (v, c) => Math.addExact(if (v._2) baseSeed else 0L,
-        Math.multiplyExact(d, c) / 1000L),
-      emit = { case ((out, _), r) =>
-        if (r == 0L) Iterator.empty else out.iterator.map(t => (t, r / out.length)) })
-    rankResult(edges, srcCol, dstCol, ranks, digits, adjPins ++ pins)
+    val (ranks, pins) = walk(blk, flags, iterations, pinEvery,
+      u, (1000L - d) * (u / 1000L), d)(evenSplit)
+    rankResult(edges, srcCol, dstCol, blk, ranks, digits, blkPins ++ flagPins ++ pins)
   }
 
   /** Fixed-round k-core peeling over an undirected edge table —
@@ -476,13 +555,12 @@ object Graphs {
     * peel to the true fixpoint.
     *
     * Input is canonicalized like [[labelPropagation]] (nulls/self
-    * loops dropped, duplicates collapsed, symmetrized). The vertex
-    * table carries each node's neighbours and its degree in the
-    * surviving subgraph. In a round, each removed node sends one
-    * message to each of its neighbours (one shuffle), and the
-    * survivors subtract what they received in a narrow join; a node
-    * left without neighbours drops out. All `rounds` rounds run in
-    * one job.
+    * loops dropped, duplicates collapsed, symmetrized). The round
+    * state is each node's degree in the surviving subgraph, 0 once it
+    * is removed. In a round, each removed node sends one message to
+    * each of its neighbours (one shuffle), and the survivors subtract
+    * what they received; a node left without neighbours drops out.
+    * All `rounds` rounds run in one job.
     *
     * @return `(node, degree)` for nodes surviving all rounds, with
     *         degree measured IN the surviving subgraph. A node whose
@@ -519,19 +597,23 @@ object Graphs {
       rounds: Option[Int]): DataFrame = {
     require(k >= 1, "k must be >= 1")
     rounds.foreach(r => require(r >= 1, "rounds must be >= 1"))
-    val part = partitioner(edges)
-    // (node, (neighbours, degree in the surviving subgraph))
-    var (core, pins) = Pins.pinRdd(
-      neighbours(edges, srcCol, dstCol, part).mapValues(a => (a, a.length.toLong)))
-    def doomed(c: RDD[(Long, (Array[Long], Long))]): Long = c.filter(_._2._2 < k).count()
+    val (blk, blkPins) = Pins.pinRdd(blocks(edges, srcCol, dstCol, None, undirected = true))
+    // degree in the surviving subgraph; 0 = removed
+    var deg = blk.map(b => Array.tabulate(b.size)(b.degree(_).toLong))
+    var pins = Set.empty[Int]
+    def doomed(s: RDD[Array[Long]]): Long =
+      s.map(_.count(x => x > 0 && x < k).toLong).fold(0L)(_ + _)
     var round = 0
-    var more = rounds.isDefined || doomed(core) > 0
+    var more = rounds.isDefined || doomed(deg) > 0
     while (more) {
-      val lost = combine(core.values.flatMap { case (out, deg) =>
-        if (deg < k) out.iterator.map(t => (t, 1L)) else Iterator.empty }, part)(_ + _)
-      val (next, nextPins) = Pins.pinRdd(localJoin(core.filter(_._2._2 >= k), lost)
-        .mapValues { case ((out, deg), l) => (out, deg - l.getOrElse(0L)) }
-        .filter(_._2._2 > 0))
+      val lost = exchange(blk, deg) { (b, s, out) =>
+        for (v <- 0 until b.size) if (s(v) > 0 && s(v) < k)
+          for (j <- b.offs(v) until b.offs(v + 1)) out(b.nbrs(j), 1L)
+      }
+      val (next, nextPins) = Pins.pinRdd(deg.zipPartitions(lost) { (ss, ls) =>
+        val (s, l) = (ss.next(), ls.next())
+        Iterator(Array.tabulate(s.length)(v => if (s(v) >= k) s(v) - l(v) else 0L))
+      })
       round += 1
       more = rounds match {
         case Some(r) => round < r
@@ -542,10 +624,15 @@ object Graphs {
       // the result job
       if (rounds.isEmpty) Pins.release(edges.sparkSession.sparkContext, pins)
       pins = if (rounds.isEmpty) nextPins else pins ++ nextPins
-      core = next
+      deg = next
     }
-    result(edges, srcCol, dstCol, core.mapValues(_._2),
-      StructField("degree", LongType, nullable = false), pins)
+    val out = blk.zipPartitions(deg) { (bs, ss) =>
+      val (b, s) = (bs.next(), ss.next())
+      val live = s.indices.filter(s(_) > 0)
+      Iterator((live.map(b.ids(_)).toArray, live.map(s(_)).toArray))
+    }
+    result(edges, srcCol, dstCol, out, StructField("degree", LongType, nullable = false),
+      blkPins ++ pins)
   }
 
   /** Deterministic synchronous label propagation — community
@@ -578,15 +665,16 @@ object Graphs {
     * Input edges are canonicalized: null/self-loop rows dropped,
     * duplicates collapsed, and each edge voted in BOTH directions
     * (pass a directed table and it is treated as its undirected
-    * support). Each round joins the vertex table with the previous
-    * labels and aggregates the votes in two map-side-combined
-    * shuffles: counts keyed `(node, label)`, then the per-node argmax
-    * keyed `node`. The first level keeps the shape skew-safe: a hub's
-    * degree-many distinct votes spread over reducers by label before
-    * one row per (node, label) reaches the node's reducer. All rounds
-    * run in one job; `pinEvery` is [[pageRank]]'s. Labels never grow
-    * (they are node ids), so there is no overflow ladder to manage —
-    * this runs at any node count.
+    * support). Each round aggregates the votes in two shuffles: vote
+    * counts keyed `(node, label)`, summed on the sending side and
+    * routed by a hash of the pair, then each node's best
+    * `(count, label)`, pre-combined on the sending side and routed to
+    * the node's block. The first level keeps the shape skew-safe: a
+    * hub's degree-many distinct votes spread over reducers by label
+    * before one `(count, label)` per reducer reaches the hub's block.
+    * All rounds run in one job; `pinEvery` is [[pageRank]]'s. Labels
+    * never grow (they are node ids), so there is no overflow ladder to
+    * manage — this runs at any node count.
     *
     * @return `(node bigint, label bigint)` — one row per distinct
     *         endpoint; `label` is the community representative's id.
@@ -599,26 +687,57 @@ object Graphs {
       pinEvery: Int = 1): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(pinEvery >= 1, "pinEvery must be >= 1")
-    val part = partitioner(edges)
     // every node has >= 1 neighbour, so every node gets a vote each round
-    val (adj, adjPins) = Pins.pinRdd(neighbours(edges, srcCol, dstCol, part))
-    var labels: Option[RDD[(Long, Long)]] = None
-    var pins = adjPins
+    val (blk, blkPins) = Pins.pinRdd(blocks(edges, srcCol, dstCol, None, undirected = true))
+    val parts = blk.getNumPartitions
+    def beats(c: Long, l: Long, bestC: Long, bestL: Long): Boolean =
+      c > bestC || (c == bestC && l < bestL)
+    var labels = blk.map(_.ids)
+    var pins = blkPins
     for (i <- 1 to iterations) {
-      val voters = labels match {
-        case None => adj.map { case (n, out) => (out, n) }
-        case Some(l) => localJoin(adj, l).values.map { case (out, lab) => (out, lab.get) }
+      val votes = blk.zipPartitions(labels) { (bs, ls) =>
+        val (b, l) = (bs.next(), ls.next())
+        val counts = Array.fill(parts)(new LongTable(2, 1, b.nbrs.length / parts + 16))
+        for (v <- 0 until b.size; j <- b.offs(v) until b.offs(v + 1)) {
+          val t = b.nbrs(j)
+          val m = counts(Math.floorMod(31 * java.lang.Long.hashCode(t) +
+            java.lang.Long.hashCode(l(v)), parts))
+          m.add(0, m.slot(t, l(v)), 1L)
+        }
+        posted(counts)
       }
-      val counts = combine(
-        voters.flatMap { case (out, l) => out.iterator.map(t => ((t, l), 1L)) }, part)(_ + _)
-      val next = combine(counts.map { case ((t, l), c) => (t, (c, l)) }, part)(
-        (a, b) => if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
-        .mapValues(_._2)
+      // (node, label) counts, then each node's best (count, label) here
+      val bests = shuffled(votes, parts).mapPartitions { recs =>
+        val counts = new LongTable(2, 1, 64)
+        recs.foreach { case Array(ts, ls, cs) =>
+          for (j <- ts.indices) counts.add(0, counts.slot(ts(j), ls(j)), cs(j))
+        }
+        val best = Array.fill(parts)(new LongTable(1, 2, counts.size / parts + 16))
+        for (s <- 0 until counts.size) {
+          val (t, l, c) = (counts.key(s), counts.key(s, 1), counts.value(0, s))
+          val m = best(owner(t, parts))
+          val x = m.slot(t)
+          if (beats(c, l, m.value(0, x), m.value(1, x))) { m.set(0, x, c); m.set(1, x, l) }
+        }
+        posted(best)
+      }
+      val next = blk.zipPartitions(shuffled(bests, parts)) { (bs, recs) =>
+        val b = bs.next()
+        val (bestC, bestL) = (new Array[Long](b.size), new Array[Long](b.size))
+        recs.foreach { case Array(ts, cs, ls) =>
+          for (j <- ts.indices) {
+            val v = b.index.find(ts(j))
+            if (beats(cs(j), ls(j), bestC(v), bestL(v))) { bestC(v) = cs(j); bestL(v) = ls(j) }
+          }
+        }
+        Iterator(bestL)
+      }
       val (l, ids) = pinRound(next, i, iterations, pinEvery)
-      labels = Some(l)
+      labels = l
       pins ++= ids
     }
-    result(edges, srcCol, dstCol, labels.get, StructField("label", LongType), pins)
+    val out = blk.zipPartitions(labels)((bs, ls) => Iterator((bs.next().ids, ls.next())))
+    result(edges, srcCol, dstCol, out, StructField("label", LongType), pins)
   }
 
   /** Fixed-iteration HITS (Kleinberg 1999, "Authoritative sources in

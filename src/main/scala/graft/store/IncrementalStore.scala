@@ -13,13 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     [[compactHistory]]);
   *   - `current_v<N>/` — the current snapshot, REPLACED per flush
   *     (its size is the entity count, a sliver of total history);
-  *   - `MANIFEST` — the live snapshot version N, the commit point of a
-  *     flush (and the reason a flush never reads the dir it writes);
+  *   - `MANIFEST` — the live snapshot version N as `"<N>\n"`, the
+  *     commit point of a flush (and the reason a flush never reads the
+  *     dir it writes); `MANIFEST.next` exists only while it is
+  *     replaced;
   *   - `flush_v<N+1>/` — exists only while a flush runs: its one
   *     [[Scd2.merge]] pass, written partitioned by [[Scd2.Closed]].
   *
   * A flush onto snapshot N writes the merge once into `flush_v<N+1>`,
-  * renames its `_closed=false` dir to `current_v<N+1>`, writes
+  * renames its `_closed=false` dir to `current_v<N+1>`, commits
   * MANIFEST = N+1, moves the `_closed=true` files into `history/`
   * (Spark's part names carry a per-job UUID, so they never collide),
   * and deletes `flush_v<N+1>` and `current_v<N>`. Write volume is
@@ -28,11 +30,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `history/` — the union branch is eliminated by a literal-false
   * filter, so the scan lists only the snapshot directory.
   *
-  * Crash contract (one writer per `root`, and the few-byte MANIFEST
-  * rewrite taken as atomic, which `fs.create` does not promise): a
-  * flush cut at any point leaves the store reading as exactly before
-  * or exactly after it. [[IncrementalStore.open]] and every flush
-  * first [[recover]]: a
+  * Crash contract (one writer per `root`): a flush cut at any point
+  * leaves the store reading as exactly before or exactly after it.
+  * MANIFEST is never rewritten in place: the new version is written
+  * to `MANIFEST.next`, MANIFEST is deleted and `MANIFEST.next` renamed
+  * in, and only content that ends in a newline is trusted. So the
+  * commit point is the delete: a complete `MANIFEST.next` with no
+  * MANIFEST beside it is the committed version.
+  * [[IncrementalStore.open]] and every flush first [[recover]]. A
+  * `MANIFEST.next` beside MANIFEST never committed and is dropped;
+  * alone and complete it is moved in; alone and torn it can only be
+  * the first flush's, so the version is 0 and it is dropped. Then a
   * `flush_v<M>` with M = MANIFEST is committed and rolled forward (its
   * remaining closed files move to `history/`); any other `flush_v<M>`
   * is discarded, and so is every `current_v<K>` with K != MANIFEST.
@@ -48,6 +56,7 @@ class IncrementalStore private (
     FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
   private def manifestPath = new Path(root, "MANIFEST")
+  private def manifestNext = new Path(root, "MANIFEST.next")
   private def historyPath = new Path(root, "history")
   private def currentPath(v: Long) = new Path(root, s"current_v$v")
   private def flushPath(v: Long) = new Path(root, s"flush_v$v")
@@ -61,20 +70,34 @@ class IncrementalStore private (
       .map(_.getPath.getName).collect { case Versioned(n) => n.toLong }
   }
 
-  private[store] def readManifest(): Long = {
-    if (!fs.exists(manifestPath)) 0L
+  /** The version in manifest file `p`: None if `p` is missing or torn
+    * (its content does not end in a newline).
+    */
+  private def readVersion(p: Path): Option[Long] =
+    if (!fs.exists(p)) None
     else {
-      val in = fs.open(manifestPath)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
+      val in = fs.open(p)
+      val text = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+      if (text.endsWith("\n")) Some(text.trim.toLong) else None
     }
-  }
 
-  /** Flush step 3, the commit point: MANIFEST = `v`. */
+  /** The live snapshot version (class doc, crash contract); 0 before
+    * the first commit.
+    */
+  private[store] def readManifest(): Long =
+    if (fs.exists(manifestPath)) readVersion(manifestPath).getOrElse(
+      throw new IllegalStateException(s"$manifestPath is torn: it does not end in a newline"))
+    else readVersion(manifestNext).getOrElse(0L)
+
+  /** Flush step 3, the commit: MANIFEST = `v`, written beside it and
+    * renamed in. The delete of the old MANIFEST is the commit point.
+    */
   private[store] def writeManifest(v: Long): Unit = {
-    val out = fs.create(manifestPath, true)
-    try out.write(v.toString.getBytes)
+    val out = fs.create(manifestNext, true)
+    try out.write(s"$v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    fs.delete(manifestPath, false)
+    StagedSwap.move(fs, manifestNext, manifestPath)
   }
 
   private def readDir(p: Path): Option[DataFrame] =
@@ -163,6 +186,10 @@ class IncrementalStore private (
     * crash contract). The last step of every flush.
     */
   private[store] def recover(): Unit = {
+    if (fs.exists(manifestNext)) {
+      if (fs.exists(manifestPath) || readVersion(manifestNext).isEmpty) fs.delete(manifestNext, false)
+      else StagedSwap.move(fs, manifestNext, manifestPath)
+    }
     val v = readManifest()
     versions("flush_v").foreach { m =>
       if (m == v) archive(m)

@@ -2,8 +2,11 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageSubmitted}
+  SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Integer-nano PageRank: hand-checkable invariants, a naive
   * driver-side reference replay (the oracle's algebra), truncating-
@@ -424,25 +427,31 @@ class GraphsSpec extends SparkSpec {
     assert(htPins.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)))
   }
 
-  /** Jobs and submitted stages of `body`, counted by a listener that
-    * keeps only events of a job group set for the call.
+  /** Jobs and submitted stages of `body`, and the shuffle records each
+    * of its map tasks wrote, counted by a listener that keeps only
+    * events of a job group set for the call.
     */
-  private def jobsOf(body: => Unit): (Int, Int) = {
+  private def jobsOf(body: => Unit): (Int, Int, Seq[Long]) = {
     val sc = spark.sparkContext
     val group = s"graphs-spec-${java.util.UUID.randomUUID()}"
     def ours(p: java.util.Properties) =
       p != null && p.getProperty("spark.jobGroup.id") == group
     val started = new java.util.concurrent.atomic.AtomicInteger
     val ended = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val groupJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (ours(e.properties)) { groupJobs.add(e.jobId); started.incrementAndGet() }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (groupJobs.contains(e.jobId)) ended.incrementAndGet()
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) stages.incrementAndGet()
+        if (ours(e.properties)) stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null &&
+          e.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          written.add(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
     }
     sc.addSparkListener(listener)
     try {
@@ -453,19 +462,28 @@ class GraphsSpec extends SparkSpec {
       while ((started.get == 0 || ended.get < started.get) && System.nanoTime() < deadline)
         Thread.sleep(50)
       assert(started.get > 0 && ended.get == started.get, "listener bus did not drain")
-      (started.get, stages.get)
+      (started.get, stages.size, written.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
   test("fixed rounds run as stages of one job: job and stage counts per call") {
     val rnd = new scala.util.Random(3)
-    val e = (1 to 400).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
-      .toDF("src", "dst")
-    // setup job (vertex table + node count), rounds job, the caller's collect
-    val (prJobs, prStages) = jobsOf(Graphs.pageRank(e, "src", "dst", 8).collect())
+    val raw = (1 to 400).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong, 1L + rnd.nextInt(4)))
+    val e = raw.map(t => (t._1, t._2)).toDF("src", "dst")
+    // setup job (vertex blocks + node count), rounds job, the caller's collect
+    val (prJobs, prStages, _) = jobsOf(Graphs.pageRank(e, "src", "dst", 8).collect())
     assert(prJobs <= 3, s"pageRank(8) ran $prJobs jobs")
     assert(prStages <= 8 + 4, s"pageRank(8) ran $prStages stages: more than one shuffle per round")
-    val (lpJobs, lpStages) = jobsOf(Graphs.labelPropagation(e, "src", "dst", 5).collect())
+    val (wJobs, wStages, _) = jobsOf(
+      Graphs.weightedPageRank(raw.toDF("src", "dst", "w"), "src", "dst", "w", 8).collect())
+    assert(wJobs <= 3, s"weightedPageRank(8) ran $wJobs jobs")
+    assert(wStages <= 8 + 4, s"weightedPageRank(8) ran $wStages stages")
+    // the setup job has one more shuffle: the seed ids to their blocks
+    val (pJobs, pStages, _) = jobsOf(Graphs.personalizedPageRank(
+      e, "src", "dst", Seq(1L, 2L).toDF("s"), "s", 8).collect())
+    assert(pJobs <= 3, s"personalizedPageRank(8) ran $pJobs jobs")
+    assert(pStages <= 8 + 5, s"personalizedPageRank(8) ran $pStages stages")
+    val (lpJobs, lpStages, _) = jobsOf(Graphs.labelPropagation(e, "src", "dst", 5).collect())
     assert(lpJobs <= 3, s"labelPropagation(5) ran $lpJobs jobs")
     assert(lpStages <= 2 * 5 + 3,
       s"labelPropagation(5) ran $lpStages stages: more than two shuffles per round")
@@ -474,7 +492,7 @@ class GraphsSpec extends SparkSpec {
     val core = for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)
     val path = Seq((5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
     val peelRounds = 5
-    val (kcJobs, _) = jobsOf {
+    val (kcJobs, _, _) = jobsOf {
       val got = Graphs.kCore((core ++ path).toDF("src", "dst"), "src", "dst", 2)
         .as[(Long, Long)].collect().toMap
       assert(got == (1L to 5L).map(_ -> 4L).toMap)
@@ -483,32 +501,88 @@ class GraphsSpec extends SparkSpec {
     Curation.releaseAllPins(spark)
   }
 
+  /** The six block-round operators over `df` (`src`, `dst`, `w`), the
+    * seeded walk seeded at the `s` ids of `seeds`.
+    */
+  private def operators(df: DataFrame, seeds: DataFrame): Seq[(String, () => DataFrame)] = Seq(
+    "pageRank" -> (() => Graphs.pageRank(df, "src", "dst", 6)),
+    "weightedPageRank" -> (() => Graphs.weightedPageRank(df, "src", "dst", "w", 6)),
+    "personalizedPageRank" -> (() => Graphs.personalizedPageRank(df, "src", "dst", seeds, "s", 6)),
+    "labelPropagation" -> (() => Graphs.labelPropagation(df, "src", "dst", 4)),
+    "kCoreRounds" -> (() => Graphs.kCoreRounds(df, "src", "dst", 5, 2)),
+    "kCore" -> (() => Graphs.kCore(df, "src", "dst", 5)))
+
+  /** Each operator's name and sorted rows on weighted edges `e` at
+    * `partitions` shuffle partitions.
+    */
+  private def rowsAt(partitions: Int, e: Seq[(Long, Long, Long)],
+      seeds: Seq[Long]): Seq[(String, Seq[(Long, Long)])] = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    val df = s.createDataFrame(e).toDF("src", "dst", "w")
+    operators(df, s.createDataFrame(seeds.map(Tuple1(_))).toDF("s")).map { case (name, run) =>
+      val r = run()
+      assert(r.rdd.getNumPartitions == partitions)
+      val rows = r.as[(Long, Long)].collect().toSeq.sorted
+      Graphs.unpin(r)
+      (name, rows)
+    }
+  }
+
   test("rewritten operators give identical rows at shuffle partitions 1 and 7") {
     val rnd = new scala.util.Random(5)
     val e = (1 to 300).map(_ =>
       (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong, 1L + rnd.nextInt(4)))
-    def run(partitions: Int): Seq[Seq[(Long, Long)]] = {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      val df = s.createDataFrame(e).toDF("src", "dst", "w")
-      val seeds = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L), Tuple1(3L))).toDF("s")
-      Seq(
-        Graphs.pageRank(df, "src", "dst", 6),
-        Graphs.weightedPageRank(df, "src", "dst", "w", 6),
-        Graphs.personalizedPageRank(df, "src", "dst", seeds, "s", 6),
-        Graphs.labelPropagation(df, "src", "dst", 4),
-        Graphs.kCoreRounds(df, "src", "dst", 5, 2),
-        Graphs.kCore(df, "src", "dst", 5)
-      ).map { r =>
-        assert(r.rdd.getNumPartitions == partitions)
-        val rows = r.as[(Long, Long)].collect().toSeq.sorted
-        Graphs.unpin(r)
-        rows
+    val one = rowsAt(1, e, Seq(1L, 2L, 3L))
+    assert(one.forall(_._2.nonEmpty), "an empty result would make the comparison vacuous")
+    assert(one == rowsAt(7, e, Seq(1L, 2L, 3L)))
+  }
+
+  test("a hub of 2,000 leaves: all six operators replay exactly at shuffle partitions 1 and 7") {
+    // a star both ways, random edges among the leaves (self loops and
+    // parallel edges included) and duplicate weighted edges; round 1 of
+    // labelPropagation sends the hub 2,000 distinct labels
+    val rnd = new scala.util.Random(23)
+    val leaves = 2000
+    val star = (1L to leaves).flatMap(l => Seq((0L, l, 1L + rnd.nextInt(3)), (l, 0L, 1L)))
+    val random = (1 to 6000).map(_ =>
+      (1L + rnd.nextInt(leaves), 1L + rnd.nextInt(leaves), 1L + rnd.nextInt(5)))
+    val e = star ++ random ++ random.take(300).map(t => (t._1, t._2, 2L))
+    val pairs = e.map(t => (t._1, t._2))
+    val seeds = Seq(0L, 7L, 11L)
+    val want = Seq(naivePr(pairs, 6), naiveWpr(e, 6), naivePpr(pairs, seeds.toSet, 6),
+      naiveLpa(pairs, 4), naiveCore(pairs, 5, Some(2)), naiveCore(pairs, 5, None))
+      .map(_.toSeq.sorted)
+    assert(want(5).nonEmpty && want(5).length < want(4).length, "the peel must go past round 2")
+    for (partitions <- Seq(1, 7)) {
+      rowsAt(partitions, e, seeds).zip(want).foreach { case ((name, got), w) =>
+        assert(got == w, s"$name at $partitions partitions")
       }
     }
-    val one = run(1)
-    assert(one.forall(_.nonEmpty), "an empty result would make the comparison vacuous")
-    assert(one == run(7))
+    // by round 4 the star has one label; round 1 alone shows the hub's
+    // 2,000 distinct votes, one each, going to the smallest label
+    val s7 = spark.newSession()
+    s7.conf.set("spark.sql.shuffle.partitions", "7")
+    val lp1 = Graphs.labelPropagation(s7.createDataFrame(pairs).toDF("src", "dst"), "src", "dst", 1)
+      .as[(Long, Long)].collect().toMap
+    assert(lp1 == naiveLpa(pairs, 1) && lp1(0L) == 1L)
+  }
+
+  test("a map task writes at most one shuffle record per partition") {
+    val parts = 4
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    // many more edges than partitions^2, so a record per edge or node would show
+    val rnd = new scala.util.Random(19)
+    val e = (1 to 4000).map(_ =>
+      (rnd.nextInt(500).toLong, rnd.nextInt(500).toLong, 1L + rnd.nextInt(3)))
+    val df = s.createDataFrame(e).toDF("src", "dst", "w")
+    val seeds = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L))).toDF("s")
+    for ((name, run) <- operators(df, seeds)) {
+      val (_, _, written) = jobsOf(Graphs.unpin(run()))
+      assert(written.nonEmpty, s"$name wrote no shuffle records")
+      assert(written.max <= parts, s"$name: a map task wrote ${written.max} records")
+    }
   }
 
   test("reliable-checkpoint mode: results match the replays and survive block release") {

@@ -3,6 +3,7 @@ package graft.store
 import graft.SparkSpec
 import graft.model.Meta
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -320,19 +321,67 @@ class IncrementalStoreSpec extends SparkSpec {
       ("commit", (s, _, v) => s.writeManifest(v)),
       ("one closed file archived", (_, root, v) => archiveOne(root, v)),
       ("archive", (s, _, v) => s.archive(v)))
+    def reopensAs(root: java.nio.file.Path, cut: String, want: Seq[String]): Unit = {
+      val reopened = IncrementalStore.open(ss, "t", root.toString)
+      assert(rows(reopened.df) == want, s"cut after $cut")
+      val keys = reopened.df.select("_oid", "_start").collect().toSeq
+      assert(keys.distinct.length == keys.length, s"duplicate (_oid, _start) after $cut")
+      assertClean(root)
+      assert(!Files.exists(root.resolve("MANIFEST.next")), s"MANIFEST.next left after $cut")
+      // the batch flushed again after recovery: no closed row twice
+      assert(rows(reopened.flushUpsert(c).df) == after, s"re-flush after $cut")
+    }
     for (k <- 1 to steps.length) {
       val cut = steps(k - 1)._1
       val (root, s) = seeded(cut.replace(' ', '-'))
       val v = s.readManifest() + 1
       steps.take(k).foreach(_._2(s, root, v))
-      val reopened = IncrementalStore.open(ss, "t", root.toString)
-      assert(rows(reopened.df) == (if (k >= 3) after else before), s"cut after $cut")
-      val keys = reopened.df.select("_oid", "_start").collect().toSeq
-      assert(keys.distinct.length == keys.length, s"duplicate (_oid, _start) after $cut")
-      assertClean(root)
-      // the batch flushed again after recovery: no closed row twice
-      assert(rows(reopened.flushUpsert(c).df) == after, s"re-flush after $cut")
+      reopensAs(root, cut, if (k >= 3) after else before)
     }
+
+    // cuts inside the commit, after publish: the new MANIFEST.next torn
+    // or complete beside MANIFEST (not committed), or alone once
+    // MANIFEST is deleted (committed)
+    val commitCuts = Seq[(String, Boolean, (FileSystem, Path, Long) => Unit)](
+      ("MANIFEST.next torn", false, (fs, r, v) => put(fs, new Path(r, "MANIFEST.next"), s"$v")),
+      ("MANIFEST.next written", false,
+        (fs, r, v) => put(fs, new Path(r, "MANIFEST.next"), s"$v\n")),
+      ("MANIFEST deleted", true, (fs, r, v) => {
+        put(fs, new Path(r, "MANIFEST.next"), s"$v\n")
+        fs.delete(new Path(r, "MANIFEST"), false)
+      }))
+    for ((cut, committed, write) <- commitCuts) {
+      val (root, s) = seeded(cut.replace(' ', '-'))
+      val v = s.readManifest() + 1
+      s.stage(s.currentDf, c, v)
+      s.publish(v)
+      write(hadoopFs(ss, root), new Path(root.toString), v)
+      reopensAs(root, cut, if (committed) after else before)
+    }
+  }
+
+  private def hadoopFs(s: SparkSession, root: java.nio.file.Path): FileSystem =
+    FileSystem.get(root.toUri, s.sparkContext.hadoopConfiguration)
+
+  private def put(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  test("a first flush cut inside its commit reopens as the empty store") {
+    val root = Files.createTempDirectory("graft-inc-cut-first").resolve("t")
+    val a = batch((1L, 10.0, "a"), (2L, 10.0, "x"))
+    val first = rows(IncrementalStore.open(spark, "t", root.toString).flushUpsert(a).df)
+    // MANIFEST.next torn and alone: written by the first flush only
+    val fs = hadoopFs(spark, root)
+    fs.delete(new Path(root.toString, "MANIFEST"), false)
+    put(fs, new Path(root.toString, "MANIFEST.next"), "1")
+    val reopened = IncrementalStore.open(spark, "t", root.toString)
+    assert(reopened.readManifest() == 0L)
+    assert(reopened.current.isEmpty && reopened.history.isEmpty)
+    assert(root.toFile.list().toSeq.filter(n => n.startsWith("current_v") || n.startsWith("MANIFEST"))
+      .isEmpty)
+    assert(rows(reopened.flushUpsert(a).df) == first)
   }
 
   test("a compaction cut between its two renames is restored by open") {

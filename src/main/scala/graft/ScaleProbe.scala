@@ -318,6 +318,23 @@ object ScaleProbe {
       functions.Dedup.connectedComponents(ccEdges).count()
     }
 
+    // --- graph rounds at 1M edges (50x the graph_iterate bench) -------
+    // 2,000 communities of 100 nodes, one edge in 10 leaving its
+    // community; a range-backed frame has a size estimate, so the
+    // vertex blocks are sized from it
+    val grEdges = spark.range(1000000L).select(
+      (col("id") % 200000L).as("src"),
+      when(pmod(col("id"), lit(10)) === 0, pmod(hash(col("id")), lit(200000L)))
+        .otherwise((col("id") % 200000L) / 100 * 100 + pmod(hash(col("id"), lit(1)), lit(100L)))
+        .as("dst"))
+    timed("pageRank(8) + labelPropagation(5) (1M edges)") {
+      val pr = functions.Graphs.pageRank(grEdges, "src", "dst", 8)
+      val lp = functions.Graphs.labelPropagation(grEdges, "src", "dst", 5)
+      println(s"[probe]   vertex blocks: ${pr.rdd.getNumPartitions}, " +
+        s"labels: ${lp.select(countDistinct("label")).head().getLong(0)}")
+      Seq(pr, lp).foreach(functions.Graphs.unpin)
+    }
+
     // --- deptree closure over a wide link graph ----------------------
     // 10-ary tree: the last hops' fringes are ~90% of the graph, so
     // past DeptreeIsinMax the loop switches to the r8 distributed

@@ -8,6 +8,7 @@ import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Link-graph centrality for corpus curation.
@@ -24,23 +25,25 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * [[weightedPageRank]], [[personalizedPageRank]], [[labelPropagation]],
   * [[kCoreRounds]], [[kCore]]): a DataFrame goes in and a DataFrame
   * comes out, but inside, the canonicalized edges become ONE vertex
-  * block per partition (`spark.sql.shuffle.partitions` of them): the
-  * partition's node ids, sorted, their out-edges in compressed-sparse-
-  * row arrays and an open-addressing index from id to slot. One hash
-  * of a node's id picks its partition, in the build and in every
-  * round. The blocks are built by one shuffle straight from the edge
+  * block per partition, as many as the edges' size estimate asks for
+  * ([[blocks]]): the partition's node ids, sorted, their out-edges in
+  * compressed-sparse-row arrays and an open-addressing index from id
+  * to slot. One hash of a node's id picks its partition, in the build
+  * and in every round. The blocks are built straight from the edge
   * rows and pinned. A round's state is one `Array[Long]` per partition
   * aligned with the block's ids, so reading the previous round is a
   * narrow zip of arrays. A round's messages are summed per target node
   * on the sending side, in one primitive hash table per target
   * partition, and shipped as one record of columns per target
-  * partition (label propagation: two such shuffles); the receiving
-  * side adds them into an aligned array through the index. A map task
-  * thus writes at most one shuffle record per partition, and no object
-  * per edge or node is made. The rounds are stages of a single Spark
-  * job — no Catalyst planning and no AQE re-planning between rounds,
-  * and no blocking job per round; only [[kCore]] runs one action per
-  * round, its fixpoint test. Integer arithmetic uses
+  * partition (label propagation: two such exchanges); the receiving
+  * side adds them into an aligned array through the index. Between
+  * several blocks an exchange is a shuffle in which a map task writes
+  * at most one record per partition; with one block it is narrow, and
+  * the build and all rounds run as one stage. No object per edge or
+  * node is made. The rounds are stages of a single Spark job — no
+  * Catalyst planning and no AQE re-planning between rounds, and no
+  * blocking job per round; only [[kCore]] runs one action per round,
+  * its fixpoint test. Integer arithmetic uses
   * `Math.addExact`/`multiplyExact`, so an overflow fails loudly as
   * ANSI SQL arithmetic does. [[hits]] and [[triangleCounts]] are
   * DataFrame pipelines.
@@ -110,8 +113,13 @@ object Graphs {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
+  /** Each `(partition, payload)` record moved to its partition: a
+    * shuffle, or with one partition a narrow coalesce (every record is
+    * already there), which keeps the caller in its stage.
+    */
   private def shuffled(sent: RDD[(Int, Cols)], parts: Int): RDD[Cols] =
-    sent.partitionBy(new ToPartition(parts)).values
+    if (parts == 1) sent.coalesce(1).values
+    else sent.partitionBy(new ToPartition(parts)).values
 
   /** A map task's pre-combined output: one `(partition, columns)` record
     * per target partition whose table got an entry.
@@ -119,22 +127,38 @@ object Graphs {
   private def posted(tables: Array[LongTable]): Iterator[(Int, Cols)] =
     tables.indices.iterator.filter(tables(_).size > 0).map(p => (p, tables(p).columns))
 
-  /** The vertex blocks of `edges`, one per `spark.sql.shuffle.partitions`
-    * partition, built by one shuffle. Rows with a null endpoint (or
-    * weight) drop. Each map task buckets its edges into primitive
-    * columns, one set per target partition; the reducer builds the
-    * CSR and sorts and dedupes each node's slice. Directed (`undirected
-    * = false`): every endpoint is a node, sinks with an empty slice;
-    * with a `weightCol`, parallel edges sum their weights
-    * (`Math.addExact`). Undirected: self loops drop and each edge is
-    * kept in both directions, so every node has a neighbour.
+  /** The vertex blocks of `edges`, built by one [[shuffled]] exchange.
+    * Their number is the optimizer's size estimate of the edge columns
+    * over the partition size AQE's coalescing aims at on this session,
+    * clamped to `[1, spark.sql.shuffle.partitions]`; an input Spark
+    * cannot size (a join, an RDD) keeps `spark.sql.shuffle.partitions`.
+    * The RDD's name, shown by the storage listing and the UI, gives the
+    * count and the estimate.
+    *
+    * Rows with a null endpoint (or weight) drop. Each map task buckets
+    * its edges into primitive columns, one set per target partition;
+    * the reducer builds the CSR and sorts and dedupes each node's slice.
+    * Directed (`undirected = false`): every endpoint is a node, sinks
+    * with an empty slice; with a `weightCol`, parallel edges sum their
+    * weights (`Math.addExact`). Undirected: self loops drop and each
+    * edge is kept in both directions, so every node has a neighbour.
     */
   private def blocks(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String], undirected: Boolean): RDD[Block] = {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
     val weighted = weightCol.isDefined
-    val rows = edges.select((Seq(srcCol, dstCol) ++ weightCol).map(c => col(c).cast("long")): _*)
-      .na.drop().queryExecution.toRdd
+    val projected = edges.select((Seq(srcCol, dstCol) ++ weightCol).map(c => col(c).cast("long")): _*)
+      .na.drop()
+    val conf = edges.sparkSession.sessionState.conf
+    val bytes = projected.queryExecution.optimizedPlan.stats.sizeInBytes
+    val sized = bytes < conf.defaultSizeInBytes
+    val parts = if (!sized) conf.numShufflePartitions else {
+      val advisory = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      val target = if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) advisory
+        else advisory.min(bytes / edges.sparkSession.sparkContext.defaultParallelism)
+          .max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+      ((bytes + target - 1) / target).max(1).min(conf.numShufflePartitions).toInt
+    }
+    val rows = projected.queryExecution.toRdd
     // per target partition: src, dst, weight, endpoints with no edge here
     val sent = rows.mapPartitions { it =>
       val out = Array.fill(parts, 4)(new mutable.ArrayBuilder.ofLong)
@@ -154,6 +178,7 @@ object Graphs {
         .map(p => (p, out(p).map(_.result())))
     }
     shuffled(sent, parts).mapPartitions(it => Iterator(block(it.toArray, weighted)))
+      .setName(s"graph blocks: $parts, edge estimate ${if (sized) s"$bytes B" else "unknown"}")
   }
 
   /** The CSR block of one partition's received edge columns. */
@@ -359,9 +384,10 @@ object Graphs {
     *
     * Jobs: one setup job builds and pins the vertex blocks and counts
     * their nodes for the unit choice; one more runs all `iterations`
-    * rounds (one shuffle each, see [[Graphs]]) and pins the result.
-    * `pinEvery` bounds how far back a lost block recomputes; it adds
-    * no job.
+    * rounds and pins the result. Each round is one exchange: a shuffle
+    * between several blocks, or with one block none, so the job is one
+    * stage (see [[Graphs]]). `pinEvery` bounds how far back a lost block
+    * recomputes; it adds no job.
     *
     * @return `(node bigint, rank_nano bigint)` — one row per distinct
     *         endpoint of `edges`.
@@ -415,8 +441,9 @@ object Graphs {
     * multiplicity semantics the unweighted walk's `distinct`
     * deliberately discards); null endpoints/weights drop.
     *
-    * Job shape identical to [[pageRank]], over blocks that carry each
-    * out-edge's summed weight.
+    * Jobs as in [[pageRank]] (one exchange per round, a stage boundary
+    * only between several blocks), over blocks that carry each out-edge's
+    * summed weight.
     */
   def weightedPageRank(
       edges: DataFrame,
@@ -492,9 +519,9 @@ object Graphs {
     * rounds shuffle only the reached FRONTIER (seeds, then their k-hop
     * neighborhood) — integer-exact (a zero rank contributes zero) and
     * what makes seeded walks cheap on web-scale graphs. The seed ids
-    * reach their blocks by one more shuffle in the setup job, as a
-    * pinned 0/1 flag array per partition; the job shape is
-    * [[pageRank]]'s.
+    * reach their blocks by one more exchange in the setup job (a
+    * shuffle only between several blocks), as a pinned 0/1 flag array
+    * per partition; otherwise the jobs are [[pageRank]]'s.
     *
     * @param seeds frame whose `seedCol` holds the seed node ids;
     *              ids not present in the graph are ignored.

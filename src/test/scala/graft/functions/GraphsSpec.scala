@@ -3,7 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -427,11 +427,12 @@ class GraphsSpec extends SparkSpec {
     assert(htPins.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)))
   }
 
-  /** Jobs and submitted stages of `body`, and the shuffle records each
-    * of its map tasks wrote, counted by a listener that keeps only
-    * events of a job group set for the call.
+  /** Jobs and submitted stages of `body`, the shuffle records each of
+    * its map tasks wrote and the names of the RDDs its stages ran,
+    * counted by a listener that keeps only events of a job group set
+    * for the call.
     */
-  private def jobsOf(body: => Unit): (Int, Int, Seq[Long]) = {
+  private def jobsOf(body: => Unit): (Int, Int, Seq[Long], Set[String]) = {
     val sc = spark.sparkContext
     val group = s"graphs-spec-${java.util.UUID.randomUUID()}"
     def ours(p: java.util.Properties) =
@@ -441,13 +442,17 @@ class GraphsSpec extends SparkSpec {
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val groupJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val written = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val names = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (ours(e.properties)) { groupJobs.add(e.jobId); started.incrementAndGet() }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (groupJobs.contains(e.jobId)) ended.incrementAndGet()
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) stages.add(e.stageInfo.stageId)
+        if (ours(e.properties)) {
+          stages.add(e.stageInfo.stageId)
+          e.stageInfo.rddInfos.foreach(r => names.add(r.name))
+        }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.contains(e.stageId) && e.taskMetrics != null &&
           e.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
@@ -462,28 +467,29 @@ class GraphsSpec extends SparkSpec {
       while ((started.get == 0 || ended.get < started.get) && System.nanoTime() < deadline)
         Thread.sleep(50)
       assert(started.get > 0 && ended.get == started.get, "listener bus did not drain")
-      (started.get, stages.size, written.asScala.toSeq)
+      (started.get, stages.size, written.asScala.toSeq, names.asScala.toSet)
     } finally sc.removeSparkListener(listener)
   }
 
   test("fixed rounds run as stages of one job: job and stage counts per call") {
+    val s = blocksAt(4)
     val rnd = new scala.util.Random(3)
     val raw = (1 to 400).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong, 1L + rnd.nextInt(4)))
-    val e = raw.map(t => (t._1, t._2)).toDF("src", "dst")
+    val e = s.createDataFrame(raw.map(t => (t._1, t._2))).toDF("src", "dst")
     // setup job (vertex blocks + node count), rounds job, the caller's collect
-    val (prJobs, prStages, _) = jobsOf(Graphs.pageRank(e, "src", "dst", 8).collect())
+    val (prJobs, prStages, _, _) = jobsOf(Graphs.pageRank(e, "src", "dst", 8).collect())
     assert(prJobs <= 3, s"pageRank(8) ran $prJobs jobs")
     assert(prStages <= 8 + 4, s"pageRank(8) ran $prStages stages: more than one shuffle per round")
-    val (wJobs, wStages, _) = jobsOf(
-      Graphs.weightedPageRank(raw.toDF("src", "dst", "w"), "src", "dst", "w", 8).collect())
+    val (wJobs, wStages, _, _) = jobsOf(Graphs.weightedPageRank(
+      s.createDataFrame(raw).toDF("src", "dst", "w"), "src", "dst", "w", 8).collect())
     assert(wJobs <= 3, s"weightedPageRank(8) ran $wJobs jobs")
     assert(wStages <= 8 + 4, s"weightedPageRank(8) ran $wStages stages")
     // the setup job has one more shuffle: the seed ids to their blocks
-    val (pJobs, pStages, _) = jobsOf(Graphs.personalizedPageRank(
-      e, "src", "dst", Seq(1L, 2L).toDF("s"), "s", 8).collect())
+    val (pJobs, pStages, _, _) = jobsOf(Graphs.personalizedPageRank(
+      e, "src", "dst", s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L))).toDF("s"), "s", 8).collect())
     assert(pJobs <= 3, s"personalizedPageRank(8) ran $pJobs jobs")
     assert(pStages <= 8 + 5, s"personalizedPageRank(8) ran $pStages stages")
-    val (lpJobs, lpStages, _) = jobsOf(Graphs.labelPropagation(e, "src", "dst", 5).collect())
+    val (lpJobs, lpStages, _, _) = jobsOf(Graphs.labelPropagation(e, "src", "dst", 5).collect())
     assert(lpJobs <= 3, s"labelPropagation(5) ran $lpJobs jobs")
     assert(lpStages <= 2 * 5 + 3,
       s"labelPropagation(5) ran $lpStages stages: more than two shuffles per round")
@@ -492,8 +498,8 @@ class GraphsSpec extends SparkSpec {
     val core = for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)
     val path = Seq((5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
     val peelRounds = 5
-    val (kcJobs, _, _) = jobsOf {
-      val got = Graphs.kCore((core ++ path).toDF("src", "dst"), "src", "dst", 2)
+    val (kcJobs, _, _, _) = jobsOf {
+      val got = Graphs.kCore(s.createDataFrame(core ++ path).toDF("src", "dst"), "src", "dst", 2)
         .as[(Long, Long)].collect().toMap
       assert(got == (1L to 5L).map(_ -> 4L).toMap)
     }
@@ -512,13 +518,24 @@ class GraphsSpec extends SparkSpec {
     "kCoreRounds" -> (() => Graphs.kCoreRounds(df, "src", "dst", 5, 2)),
     "kCore" -> (() => Graphs.kCore(df, "src", "dst", 5)))
 
-  /** Each operator's name and sorted rows on weighted edges `e` at
-    * `partitions` shuffle partitions.
+  /** A session at `partitions` shuffle partitions whose partition size
+    * targets are one byte, so the graphs of these specs build
+    * `partitions` vertex blocks rather than the one their size gets.
+    */
+  private def blocksAt(partitions: Int): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    s
+  }
+
+  /** Each operator's name and sorted rows on weighted edges `e` over
+    * `partitions` vertex blocks.
     */
   private def rowsAt(partitions: Int, e: Seq[(Long, Long, Long)],
       seeds: Seq[Long]): Seq[(String, Seq[(Long, Long)])] = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    val s = blocksAt(partitions)
     val df = s.createDataFrame(e).toDF("src", "dst", "w")
     operators(df, s.createDataFrame(seeds.map(Tuple1(_))).toDF("s")).map { case (name, run) =>
       val r = run()
@@ -561,8 +578,7 @@ class GraphsSpec extends SparkSpec {
     }
     // by round 4 the star has one label; round 1 alone shows the hub's
     // 2,000 distinct votes, one each, going to the smallest label
-    val s7 = spark.newSession()
-    s7.conf.set("spark.sql.shuffle.partitions", "7")
+    val s7 = blocksAt(7)
     val lp1 = Graphs.labelPropagation(s7.createDataFrame(pairs).toDF("src", "dst"), "src", "dst", 1)
       .as[(Long, Long)].collect().toMap
     assert(lp1 == naiveLpa(pairs, 1) && lp1(0L) == 1L)
@@ -570,8 +586,7 @@ class GraphsSpec extends SparkSpec {
 
   test("a map task writes at most one shuffle record per partition") {
     val parts = 4
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    val s = blocksAt(parts)
     // many more edges than partitions^2, so a record per edge or node would show
     val rnd = new scala.util.Random(19)
     val e = (1 to 4000).map(_ =>
@@ -579,36 +594,81 @@ class GraphsSpec extends SparkSpec {
     val df = s.createDataFrame(e).toDF("src", "dst", "w")
     val seeds = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L))).toDF("s")
     for ((name, run) <- operators(df, seeds)) {
-      val (_, _, written) = jobsOf(Graphs.unpin(run()))
+      val (_, _, written, _) = jobsOf(Graphs.unpin(run()))
       assert(written.nonEmpty, s"$name wrote no shuffle records")
       assert(written.max <= parts, s"$name: a map task wrote ${written.max} records")
     }
   }
 
+  test("a small graph builds one block, and its rounds write no shuffle records") {
+    val rnd = new scala.util.Random(3)
+    val e = (1 to 400).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)).toDF("src", "dst")
+    val runs = Seq(
+      "pageRank(8)" -> (() => Graphs.pageRank(e, "src", "dst", 8)),
+      "labelPropagation(5)" -> (() => Graphs.labelPropagation(e, "src", "dst", 5)),
+      "kCore" -> (() => Graphs.kCore(e, "src", "dst", 3)))
+    for ((name, run) <- runs) {
+      val (jobs, stages, written, names) = jobsOf {
+        val r = run()
+        assert(r.rdd.getNumPartitions == 1, s"$name: ${r.rdd.getNumPartitions} blocks")
+        Graphs.unpin(r)
+      }
+      // the build and every round of a job in one stage
+      assert(stages == jobs, s"$name ran $stages stages in $jobs jobs")
+      assert(written.isEmpty, s"$name wrote shuffle records: $written")
+      assert(names.exists(_.startsWith("graph blocks: 1, edge estimate ")), s"$name: $names")
+    }
+  }
+
+  test("the block count: the size estimate over the target size, within [1, shuffle partitions]") {
+    val rnd = new scala.util.Random(29)
+    val e = (1 to 300).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    def blocks(df: DataFrame): Int = {
+      val r = Graphs.pageRank(df, "src", "dst", 2)
+      try r.rdd.getNumPartitions finally Graphs.unpin(r)
+    }
+    // the default 1 MB minimum partition size holds the whole graph
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "7")
+    val local = s.createDataFrame(e).toDF("src", "dst")
+    assert(blocks(local) == 1)
+    // a third of the estimate per block: three blocks
+    val bytes = local.queryExecution.optimizedPlan.stats.sizeInBytes
+    val third = spark.newSession()
+    third.conf.set("spark.sql.shuffle.partitions", "7")
+    third.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    third.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", (bytes / 3 + 1).toString)
+    assert(blocks(third.createDataFrame(e).toDF("src", "dst")) == 3)
+    // one-byte targets: clamped to the shuffle partitions
+    assert(blocks(blocksAt(7).createDataFrame(e).toDF("src", "dst")) == 7)
+    // an RDD has no size estimate: the shuffle partitions, however small
+    assert(blocks(s.createDataFrame(s.sparkContext.parallelize(e)).toDF("src", "dst")) == 7)
+  }
+
   test("reliable-checkpoint mode: results match the replays and survive block release") {
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-graphs-ckpt-").toString
-    sc.setCheckpointDir(dir)
-    try {
-      val rnd = new scala.util.Random(17)
-      val e = (1 to 120).map(_ => (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
-      val df = e.toDF("src", "dst")
-      val pr = Graphs.pageRank(df, "src", "dst", 4)
-      val lp = Graphs.labelPropagation(df, "src", "dst", 3)
-      val kc = Graphs.kCore(df, "src", "dst", 3)
-      def read() = (pr.as[(Long, Long)].collect().toMap, lp.as[(Long, Long)].collect().toMap,
-        kc.as[(Long, Long)].collect().toMap)
-      val want = (naivePr(e, 4), naiveLpa(e, 3), naiveCore(e, 3, None))
-      assert(read() == want)
-      Seq(pr, lp, kc).foreach(Graphs.unpin)
-      assert(read() == want, "a result changed after its blocks were released")
-    } finally {
-      // restore the no-dir default for the other suites (the field is
-      // private; reflection is the only unset path)
-      val f = sc.getClass.getDeclaredField("checkpointDir")
-      f.setAccessible(true)
-      f.set(sc, None)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    withTempDir("graft-graphs-ckpt-") { dir =>
+      sc.setCheckpointDir(dir.toString)
+      try {
+        val rnd = new scala.util.Random(17)
+        val e = (1 to 120).map(_ => (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
+        val df = e.toDF("src", "dst")
+        val pr = Graphs.pageRank(df, "src", "dst", 4)
+        val lp = Graphs.labelPropagation(df, "src", "dst", 3)
+        val kc = Graphs.kCore(df, "src", "dst", 3)
+        def read() = (pr.as[(Long, Long)].collect().toMap, lp.as[(Long, Long)].collect().toMap,
+          kc.as[(Long, Long)].collect().toMap)
+        val want = (naivePr(e, 4), naiveLpa(e, 3), naiveCore(e, 3, None))
+        assert(read() == want)
+        Seq(pr, lp, kc).foreach(Graphs.unpin)
+        assert(read() == want, "a result changed after its blocks were released")
+      } finally {
+        // restore the no-dir default for the other suites (the field is
+        // private; reflection is the only unset path)
+        val f = sc.getClass.getDeclaredField("checkpointDir")
+        f.setAccessible(true)
+        f.set(sc, None)
+      }
     }
   }
 

@@ -21,21 +21,23 @@ class ContainerExtrasSpec extends SparkSpec {
   }
 
   test("drop deletes the persisted path and empties state; schema survives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drop").toString
-    val path = s"$dir/tbl"
-    val df = Seq((1L, 100.0, "a")).toDF("_oid", "_start", "tag")
-      .withColumn(Meta.END, lit(null).cast(DoubleType))
-    val cc = new Container(spark, "droptest", df, Some(path)).save()
-    assert(new java.io.File(path).exists())
-    assert(Container.load(spark, "droptest", path).count() == 1L)
-    cc.drop()
-    assert(!new java.io.File(path).exists(), "drop must delete the path")
-    assert(cc.count() == 0L, "state must be empty after drop")
-    // schema preserved: inserts after drop still line up
-    assert(cc.df.schema.fieldNames.contains("tag"))
-    // idempotent: dropping an already-dropped container is a no-op
-    cc.drop()
-    assert(!new java.io.File(path).exists())
+    withTempDir("graft_drop") { tmp =>
+      val dir = tmp.toString
+      val path = s"$dir/tbl"
+      val df = Seq((1L, 100.0, "a")).toDF("_oid", "_start", "tag")
+        .withColumn(Meta.END, lit(null).cast(DoubleType))
+      val cc = new Container(spark, "droptest", df, Some(path)).save()
+      assert(new java.io.File(path).exists())
+      assert(Container.load(spark, "droptest", path).count() == 1L)
+      cc.drop()
+      assert(!new java.io.File(path).exists(), "drop must delete the path")
+      assert(cc.count() == 0L, "state must be empty after drop")
+      // schema preserved: inserts after drop still line up
+      assert(cc.df.schema.fieldNames.contains("tag"))
+      // idempotent: dropping an already-dropped container is a no-op
+      cc.drop()
+      assert(!new java.io.File(path).exists())
+    }
   }
 
   test("ls lists catalog tables (reference: cube listing)") {
@@ -133,14 +135,16 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("export writes a one-way ORC copy without rebinding the container") {
-    import spark.implicits._
-    val df = Seq((1L, 0.0, "a"), (2L, 0.0, "b")).toDF("_oid", "_start", "tag")
-      .withColumn("_end", org.apache.spark.sql.functions.lit(null).cast("double"))
-    val cont = new graft.store.Container(spark, "exp_t", df)
-    val dest = java.nio.file.Files.createTempDirectory("graft-export").toString
-    cont.export(dest, "orc")
-    val back = spark.read.orc(dest)
-    assert(back.count() == cont.df.count())
-    assert(back.columns.sorted.toSeq == cont.df.columns.sorted.toSeq)
+    withTempDir("graft-export") { tmp =>
+      import spark.implicits._
+      val df = Seq((1L, 0.0, "a"), (2L, 0.0, "b")).toDF("_oid", "_start", "tag")
+        .withColumn("_end", org.apache.spark.sql.functions.lit(null).cast("double"))
+      val cont = new graft.store.Container(spark, "exp_t", df)
+      val dest = tmp.toString
+      cont.export(dest, "orc")
+      val back = spark.read.orc(dest)
+      assert(back.count() == cont.df.count())
+      assert(back.columns.sorted.toSeq == cont.df.columns.sorted.toSeq)
+    }
   }
 }

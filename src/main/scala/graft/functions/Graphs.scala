@@ -30,23 +30,37 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * compressed-sparse-row arrays and an open-addressing index from id
   * to slot. One hash of a node's id picks its partition, in the build
   * and in every round. The blocks are built straight from the edge
-  * rows and pinned. A round's state is one `Array[Long]` per partition
-  * aligned with the block's ids, so reading the previous round is a
-  * narrow zip of arrays. A round's messages are summed per target node
-  * on the sending side, in one primitive hash table per target
-  * partition, and shipped as one record of columns per target
-  * partition (label propagation: two such exchanges); the receiving
-  * side adds them into an aligned array through the index. Between
-  * several blocks an exchange is a shuffle in which a map task writes
-  * at most one record per partition; with one block it is narrow, and
-  * the build and all rounds run as one stage. No object per edge or
-  * node is made. The rounds are stages of a single Spark job — no
-  * Catalyst planning and no AQE re-planning between rounds, and no
-  * blocking job per round; only [[kCore]] runs one action per round,
-  * its fixpoint test. Integer arithmetic uses
-  * `Math.addExact`/`multiplyExact`, so an overflow fails loudly as
-  * ANSI SQL arithmetic does. [[hits]] and [[triangleCounts]] are
-  * DataFrame pipelines.
+  * rows. A round's state is one `Array[Long]` per partition aligned
+  * with the block's ids. A round's messages are summed per target
+  * node, and the receiving side adds them into an aligned array
+  * through the index. No object per edge or node is made, and there
+  * is no Catalyst planning and no AQE re-planning between rounds. The
+  * block count picks one of two paths for the rounds:
+  *
+  *  - several blocks: the blocks are pinned, and reading the previous
+  *    round is a narrow zip of arrays. A round's messages are summed on
+  *    the sending side, in one primitive hash table per target
+  *    partition, and shipped as one record of columns per target
+  *    partition (label propagation: two such exchanges), so a map task
+  *    writes at most one shuffle record per partition. The rounds are
+  *    the stages of a single Spark job, each built on the driver as a
+  *    few RDD steps; only [[kCore]] runs one action per round, its
+  *    fixpoint test. This is the path for a graph that does not fit in
+  *    one task.
+  *  - one block: all rounds run inside the one task of one `map` (or
+  *    `zipPartitions`) over the block, as a plain loop on arrays that
+  *    calls the same per-node kernels; [[localExchange]] adds each
+  *    message straight into the aligned sums. The driver builds no RDD
+  *    per round, so it cleans no closure per round (Spark's closure
+  *    cleaner was most of the driver's time on small graphs), and
+  *    [[kCore]] runs no per-round job. The block is pinned only by the
+  *    walks, which also read it in their setup job. The rounds' RDD is
+  *    named `graph rounds in one task: <operator>, <rounds>`, which the
+  *    storage listing and the UI show.
+  *
+  * Integer arithmetic uses `Math.addExact`/`multiplyExact`, so an
+  * overflow fails loudly as ANSI SQL arithmetic does. [[hits]] and
+  * [[triangleCounts]] are DataFrame pipelines.
   */
 object Graphs {
 
@@ -115,11 +129,12 @@ object Graphs {
 
   /** Each `(partition, payload)` record moved to its partition: a
     * shuffle, or with one partition a narrow coalesce (every record is
-    * already there), which keeps the caller in its stage.
+    * already there), which keeps the caller in its stage. The records
+    * keep their key, which consumers ignore: `.values` would be one
+    * more closure for the driver to clean per call.
     */
-  private def shuffled(sent: RDD[(Int, Cols)], parts: Int): RDD[Cols] =
-    if (parts == 1) sent.coalesce(1).values
-    else sent.partitionBy(new ToPartition(parts)).values
+  private def shuffled(sent: RDD[(Int, Cols)], parts: Int): RDD[(Int, Cols)] =
+    if (parts == 1) sent.coalesce(1) else sent.partitionBy(new ToPartition(parts))
 
   /** A map task's pre-combined output: one `(partition, columns)` record
     * per target partition whose table got an entry.
@@ -177,7 +192,7 @@ object Graphs {
       out.indices.iterator.filter(p => out(p).exists(_.length > 0))
         .map(p => (p, out(p).map(_.result())))
     }
-    shuffled(sent, parts).mapPartitions(it => Iterator(block(it.toArray, weighted)))
+    shuffled(sent, parts).mapPartitions(it => Iterator(block(it.map(_._2).toArray, weighted)))
       .setName(s"graph blocks: $parts, edge estimate ${if (sized) s"$bytes B" else "unknown"}")
   }
 
@@ -242,7 +257,7 @@ object Graphs {
     blocks.zipPartitions(shuffled(sent, parts)) { (bs, msgs) =>
       val b = bs.next()
       val c = new Array[Long](b.size)
-      msgs.foreach { case Array(ts, vs) =>
+      msgs.foreach { case (_, Array(ts, vs)) =>
         for (j <- ts.indices) {
           val i = b.index.find(ts(j))
           c(i) = Math.addExact(c(i), vs(j))
@@ -252,6 +267,22 @@ object Graphs {
     }
   }
 
+  /** [[exchange]] within one block, for the rounds that run inside one
+    * task: `send(node, v)` adds `v` straight into `node`'s received sum.
+    */
+  private def localExchange(b: Block, state: Array[Long])(
+      emit: (Block, Array[Long], (Long, Long) => Unit) => Unit): Array[Long] = {
+    val c = new Array[Long](b.size)
+    emit(b, state, (t, v) => { val i = b.index.find(t); c(i) = Math.addExact(c(i), v) })
+    c
+  }
+
+  /** The one-partition `rounds` RDD, named for the storage listing and
+    * the UI as the result of rounds run inside one task.
+    */
+  private def inTask[T](rounds: RDD[T], operator: String, count: String): RDD[T] =
+    rounds.setName(s"graph rounds in one task: $operator, $count")
+
   /** `iterations` synchronous rounds of the damped walk over `blocks`,
     * `seeds(v)` being 1 for a seed node and 0 otherwise:
     *
@@ -259,29 +290,41 @@ object Graphs {
     *
     * where `send(block, slot, r, out)` sends the contributions of a
     * node of rank `r > 0` with out-edges (a zero rank sends nothing: it
-    * would send zeros). Each round is one [[exchange]]. Every `pinEvery`-th
-    * round's ranks are pinned as they are computed, so a lost block
-    * recomputes at most `pinEvery` rounds, and no round waits on a job.
-    * Returns the final ranks, not yet computed, and the pins they hold.
+    * would send zeros). With one block, all rounds run in its one task
+    * and nothing is pinned. Otherwise each round is one [[exchange]], and
+    * every `pinEvery`-th round's ranks are pinned as they are computed,
+    * so a lost block recomputes at most `pinEvery` rounds, and no round
+    * waits on a job. Returns the final ranks, not yet computed, and the
+    * pins they hold.
     */
-  private def walk(blocks: RDD[Block], seeds: RDD[Array[Long]], iterations: Int,
-      pinEvery: Int, u: Long, base: Long, d: Long)(
+  private def walk(operator: String, blocks: RDD[Block], seeds: RDD[Array[Long]],
+      iterations: Int, pinEvery: Int, u: Long, base: Long, d: Long)(
       send: (Block, Int, Long, (Long, Long) => Unit) => Unit): (RDD[Array[Long]], Set[Int]) = {
-    var ranks = seeds.map(_.map(_ * u))
-    var pins = Set.empty[Int]
-    for (i <- 1 to iterations) {
-      val sums = exchange(blocks, ranks) { (b, r, out) =>
-        for (v <- 0 until b.size) if (r(v) != 0L && b.degree(v) > 0) send(b, v, r(v), out)
+    def emit(b: Block, r: Array[Long], out: (Long, Long) => Unit): Unit =
+      for (v <- 0 until b.size) if (r(v) != 0L && b.degree(v) > 0) send(b, v, r(v), out)
+    def next(c: Array[Long], s: Array[Long]): Array[Long] =
+      Array.tabulate(c.length)(v => Math.addExact(s(v) * base, Math.multiplyExact(d, c(v)) / 1000L))
+    if (blocks.getNumPartitions == 1) {
+      val ranks = blocks.zipPartitions(seeds) { (bs, ss) =>
+        val (b, s) = (bs.next(), ss.next())
+        var r = s.map(_ * u)
+        for (_ <- 1 to iterations) r = next(localExchange(b, r)(emit), s)
+        Iterator(r)
       }
-      val (next, ids) = pinRound(sums.zipPartitions(seeds) { (cs, ss) =>
-        val (c, s) = (cs.next(), ss.next())
-        Iterator(Array.tabulate(c.length)(v =>
-          Math.addExact(s(v) * base, Math.multiplyExact(d, c(v)) / 1000L)))
-      }, i, iterations, pinEvery)
-      ranks = next
-      pins ++= ids
+      (inTask(ranks, operator, s"$iterations rounds"), Set.empty)
+    } else {
+      var ranks = seeds.map(_.map(_ * u))
+      var pins = Set.empty[Int]
+      for (i <- 1 to iterations) {
+        val sums = exchange(blocks, ranks)(emit)
+        val (r, ids) = pinRound(sums.zipPartitions(seeds) { (cs, ss) =>
+          Iterator(next(cs.next(), ss.next()))
+        }, i, iterations, pinEvery)
+        ranks = r
+        pins ++= ids
+      }
+      (ranks, pins)
     }
-    (ranks, pins)
   }
 
   /** Every node a seed: the global walk's seed flags. */
@@ -295,6 +338,9 @@ object Graphs {
       pinEvery: Int): (RDD[T], Set[Int]) =
     if (i % pinEvery == 0 && i < iterations) Pins.pinRdd(state) else (state, Set.empty)
 
+  /** Reads a partition to its end, which fills any pin it computes. */
+  private def drain(it: Iterator[_]): Unit = while (it.hasNext) it.next()
+
   /** Pin the `(node ids, values)` columns `out` and run the ONE job
     * that computes them — every round still pending becomes a stage of
     * that job — then release `held` and return `(node, <field>)` over
@@ -306,7 +352,8 @@ object Graphs {
       out: RDD[(Array[Long], Array[Long])], field: StructField, held: Set[Int]): DataFrame = {
     val spark = edges.sparkSession
     val (pinned, outPins) = Pins.pinRdd(out)
-    pinned.count()
+    // not count(): the driver cleans a job's function by reading its class, and RDD's is large
+    spark.sparkContext.runJob(pinned, drain _)
     Pins.release(spark.sparkContext, held)
     val nodeNullable = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
       .schema.exists(_.nullable)
@@ -384,10 +431,13 @@ object Graphs {
     *
     * Jobs: one setup job builds and pins the vertex blocks and counts
     * their nodes for the unit choice; one more runs all `iterations`
-    * rounds and pins the result. Each round is one exchange: a shuffle
-    * between several blocks, or with one block none, so the job is one
-    * stage (see [[Graphs]]). `pinEvery` bounds how far back a lost block
-    * recomputes; it adds no job.
+    * rounds and pins the result. With one block that job is one task,
+    * which runs the rounds as a loop (see [[Graphs]]). With several,
+    * each round is one shuffle, built on the driver as a few RDD steps,
+    * and every `pinEvery`-th round is pinned, so a lost block recomputes
+    * at most `pinEvery` rounds; it adds no job. With one block
+    * `pinEvery` is validated but pins nothing: a lost result block
+    * recomputes the one task from the pinned vertex block.
     *
     * @return `(node bigint, rank_nano bigint)` — one row per distinct
     *         endpoint of `edges`.
@@ -413,7 +463,7 @@ object Graphs {
         s"damping multiply (bound $bound node·damping) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
     val d = dampingPerMille.toLong
-    val (ranks, pins) = walk(blk, allSeeds(blk), iterations, pinEvery,
+    val (ranks, pins) = walk("pageRank", blk, allSeeds(blk), iterations, pinEvery,
       u, (1000L - d) * (u / 1000L), d)(evenSplit)
     rankResult(edges, srcCol, dstCol, blk, ranks, digits, blkPins ++ pins)
   }
@@ -441,9 +491,9 @@ object Graphs {
     * multiplicity semantics the unweighted walk's `distinct`
     * deliberately discards); null endpoints/weights drop.
     *
-    * Jobs as in [[pageRank]] (one exchange per round, a stage boundary
-    * only between several blocks), over blocks that carry each out-edge's
-    * summed weight.
+    * Jobs as in [[pageRank]] (the rounds in one task with one block, one
+    * shuffle per round between several), over blocks that carry each
+    * out-edge's summed weight.
     */
   def weightedPageRank(
       edges: DataFrame,
@@ -482,7 +532,7 @@ object Graphs {
         s"overflow the $name unit (bound $bound) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
     val d = dampingPerMille.toLong
-    val (ranks, pins) = walk(blk, allSeeds(blk), iterations, pinEvery,
+    val (ranks, pins) = walk("weightedPageRank", blk, allSeeds(blk), iterations, pinEvery,
       u, (1000L - d) * (u / 1000L), d) { (b, v, r, out) =>
       val w = total(b, v)
       for (j <- b.offs(v) until b.offs(v + 1))
@@ -550,7 +600,7 @@ object Graphs {
     val (flags, flagPins) = Pins.pinRdd(blk.zipPartitions(shuffled(sent, parts)) { (bs, recs) =>
       val b = bs.next()
       val f = new Array[Long](b.size)
-      recs.foreach(_(0).foreach { s => val v = b.index.find(s); if (v >= 0) f(v) = 1L })
+      recs.foreach(_._2(0).foreach { s => val v = b.index.find(s); if (v >= 0) f(v) = 1L })
       Iterator(f)
     })
     // the ladder bounds scale with SEED mass, not graph size
@@ -564,7 +614,7 @@ object Graphs {
         s"$name-unit damping multiply (bound $bound seed·damping) — use unit=\"auto\"")
     val u = math.pow(10, digits).toLong
     val d = dampingPerMille.toLong
-    val (ranks, pins) = walk(blk, flags, iterations, pinEvery,
+    val (ranks, pins) = walk("personalizedPageRank", blk, flags, iterations, pinEvery,
       u, (1000L - d) * (u / 1000L), d)(evenSplit)
     rankResult(edges, srcCol, dstCol, blk, ranks, digits, blkPins ++ flagPins ++ pins)
   }
@@ -585,9 +635,11 @@ object Graphs {
     * loops dropped, duplicates collapsed, symmetrized). The round
     * state is each node's degree in the surviving subgraph, 0 once it
     * is removed. In a round, each removed node sends one message to
-    * each of its neighbours (one shuffle), and the survivors subtract
+    * each of its neighbours (one exchange), and the survivors subtract
     * what they received; a node left without neighbours drops out.
-    * All `rounds` rounds run in one job.
+    * All `rounds` rounds run in one job: with one block, in its one
+    * task, reading the vertex block once, so it is not pinned; with
+    * several, one shuffle per round.
     *
     * @return `(node, degree)` for nodes surviving all rounds, with
     *         degree measured IN the surviving subgraph. A node whose
@@ -603,11 +655,13 @@ object Graphs {
       rounds: Int): DataFrame =
     kCorePeel(edges, srcCol, dstCol, k, Some(rounds))
 
-  /** Exact k-core: [[kCoreRounds]] run to the fixpoint. One job per
-    * round counts the nodes the next round would remove (it also
-    * computes and pins the round); a round that would remove none
-    * ends the loop, so it terminates in at most |V| rounds and real
-    * graphs settle in a handful — no row data is collected.
+  /** Exact k-core: [[kCoreRounds]] run to the fixpoint; a round that
+    * would remove no node ends the loop, so it terminates in at most
+    * |V| rounds and real graphs settle in a handful. With one block the
+    * loop runs inside the one task of the result job and no job runs
+    * per round. With several, one job per round counts the nodes the
+    * next round would remove (it also computes and pins the round) —
+    * no row data is collected.
     */
   def kCore(
       edges: DataFrame,
@@ -624,42 +678,108 @@ object Graphs {
       rounds: Option[Int]): DataFrame = {
     require(k >= 1, "k must be >= 1")
     rounds.foreach(r => require(r >= 1, "rounds must be >= 1"))
-    val (blk, blkPins) = Pins.pinRdd(blocks(edges, srcCol, dstCol, None, undirected = true))
-    // degree in the surviving subgraph; 0 = removed
-    var deg = blk.map(b => Array.tabulate(b.size)(b.degree(_).toLong))
-    var pins = Set.empty[Int]
-    def doomed(s: RDD[Array[Long]]): Long =
-      s.map(_.count(x => x > 0 && x < k).toLong).fold(0L)(_ + _)
-    var round = 0
-    var more = rounds.isDefined || doomed(deg) > 0
-    while (more) {
-      val lost = exchange(blk, deg) { (b, s, out) =>
-        for (v <- 0 until b.size) if (s(v) > 0 && s(v) < k)
-          for (j <- b.offs(v) until b.offs(v + 1)) out(b.nbrs(j), 1L)
-      }
-      val (next, nextPins) = Pins.pinRdd(deg.zipPartitions(lost) { (ss, ls) =>
-        val (s, l) = (ss.next(), ls.next())
-        Iterator(Array.tabulate(s.length)(v => if (s(v) >= k) s(v) - l(v) else 0L))
-      })
-      round += 1
-      more = rounds match {
-        case Some(r) => round < r
-        case None => doomed(next) > 0
-      }
-      // to the fixpoint, `next` is computed and pinned by now, so the
-      // previous round's pin can go; fixed rounds hold every pin until
-      // the result job
-      if (rounds.isEmpty) Pins.release(edges.sparkSession.sparkContext, pins)
-      pins = if (rounds.isEmpty) nextPins else pins ++ nextPins
-      deg = next
-    }
-    val out = blk.zipPartitions(deg) { (bs, ss) =>
-      val (b, s) = (bs.next(), ss.next())
+    val built = blocks(edges, srcCol, dstCol, None, undirected = true)
+    // the state is each node's degree in the surviving subgraph; 0 = removed
+    def degrees(b: Block): Array[Long] = Array.tabulate(b.size)(b.degree(_).toLong)
+    def doomed(s: Array[Long]): Int = s.count(x => x > 0 && x < k)
+    def peel(b: Block, s: Array[Long], out: (Long, Long) => Unit): Unit =
+      for (v <- 0 until b.size) if (s(v) > 0 && s(v) < k)
+        for (j <- b.offs(v) until b.offs(v + 1)) out(b.nbrs(j), 1L)
+    def settle(s: Array[Long], lost: Array[Long]): Array[Long] =
+      Array.tabulate(s.length)(v => if (s(v) >= k) s(v) - lost(v) else 0L)
+    def live(b: Block, s: Array[Long]): (Array[Long], Array[Long]) = {
       val live = s.indices.filter(s(_) > 0)
-      Iterator((live.map(b.ids(_)).toArray, live.map(s(_)).toArray))
+      (live.map(b.ids(_)).toArray, live.map(s(_)).toArray)
     }
-    result(edges, srcCol, dstCol, out, StructField("degree", LongType, nullable = false),
-      blkPins ++ pins)
+    val (out, held) = if (built.getNumPartitions == 1) {
+      val peeled = built.map { b =>
+        var s = degrees(b)
+        var round = 0
+        while (rounds.fold(doomed(s) > 0)(round < _)) {
+          s = settle(s, localExchange(b, s)(peel))
+          round += 1
+        }
+        live(b, s)
+      }
+      (inTask(peeled, if (rounds.isEmpty) "kCore" else "kCoreRounds",
+        rounds.fold("to the fixpoint")(r => s"$r rounds")), Set.empty[Int])
+    } else {
+      val (blk, blkPins) = Pins.pinRdd(built)
+      var deg = blk.map(degrees)
+      var pins = Set.empty[Int]
+      def anyDoomed(s: RDD[Array[Long]]): Boolean = s.map(doomed(_).toLong).fold(0L)(_ + _) > 0
+      var round = 0
+      var more = rounds.isDefined || anyDoomed(deg)
+      while (more) {
+        val lost = exchange(blk, deg)(peel)
+        val (next, nextPins) = Pins.pinRdd(deg.zipPartitions(lost) { (ss, ls) =>
+          Iterator(settle(ss.next(), ls.next()))
+        })
+        round += 1
+        more = rounds.fold(anyDoomed(next))(round < _)
+        // to the fixpoint, `next` is computed and pinned by now, so the
+        // previous round's pin can go; fixed rounds hold every pin until
+        // the result job
+        if (rounds.isEmpty) Pins.release(edges.sparkSession.sparkContext, pins)
+        pins = if (rounds.isEmpty) nextPins else pins ++ nextPins
+        deg = next
+      }
+      (blk.zipPartitions(deg)((bs, ss) => Iterator(live(bs.next(), ss.next()))), blkPins ++ pins)
+    }
+    result(edges, srcCol, dstCol, out, StructField("degree", LongType, nullable = false), held)
+  }
+
+  /** Label propagation's total order on `(count, label)`: the higher
+    * count wins, then the smaller label.
+    */
+  private def beats(c: Long, l: Long, bestC: Long, bestL: Long): Boolean =
+    c > bestC || (c == bestC && l < bestL)
+
+  /** Label propagation's votes from block `b` at labels `l`: each node's
+    * label to each neighbour, counted per `(node, label)` and bucketed
+    * by a hash of the pair over `parts` partitions.
+    */
+  private def vote(b: Block, l: Array[Long], parts: Int): Iterator[(Int, Cols)] = {
+    val counts = Array.fill(parts)(new LongTable(2, 1, b.nbrs.length / parts + 16))
+    for (v <- 0 until b.size; j <- b.offs(v) until b.offs(v + 1)) {
+      val t = b.nbrs(j)
+      val m = counts(Math.floorMod(31 * java.lang.Long.hashCode(t) +
+        java.lang.Long.hashCode(l(v)), parts))
+      m.add(0, m.slot(t, l(v)), 1L)
+    }
+    posted(counts)
+  }
+
+  /** The `(node, label, count)` votes of one bucket summed, then each
+    * node's best `(label, count)` among them, bucketed by its block.
+    */
+  private def elect(recs: Iterator[(Int, Cols)], parts: Int): Iterator[(Int, Cols)] = {
+    val counts = new LongTable(2, 1, 64)
+    recs.foreach { case (_, Array(ts, ls, cs)) =>
+      for (j <- ts.indices) counts.add(0, counts.slot(ts(j), ls(j)), cs(j))
+    }
+    val best = Array.fill(parts)(new LongTable(1, 2, counts.size / parts + 16))
+    for (s <- 0 until counts.size) {
+      val (t, l, c) = (counts.key(s), counts.key(s, 1), counts.value(0, s))
+      val m = best(owner(t, parts))
+      val x = m.slot(t)
+      if (beats(c, l, m.value(1, x), m.value(0, x))) { m.set(0, x, l); m.set(1, x, c) }
+    }
+    posted(best)
+  }
+
+  /** Each node of `b` takes its best label over `(node, label, count)`
+    * records: the elected ones, or with one block the votes themselves.
+    */
+  private def adopt(b: Block, recs: Iterator[(Int, Cols)]): Array[Long] = {
+    val (bestC, bestL) = (new Array[Long](b.size), new Array[Long](b.size))
+    recs.foreach { case (_, Array(ts, ls, cs)) =>
+      for (j <- ts.indices) {
+        val v = b.index.find(ts(j))
+        if (beats(cs(j), ls(j), bestC(v), bestL(v))) { bestC(v) = cs(j); bestL(v) = ls(j) }
+      }
+    }
+    bestL
   }
 
   /** Deterministic synchronous label propagation — community
@@ -699,7 +819,12 @@ object Graphs {
     * the node's block. The first level keeps the shape skew-safe: a
     * hub's degree-many distinct votes spread over reducers by label
     * before one `(count, label)` per reducer reaches the hub's block.
-    * All rounds run in one job; `pinEvery` is [[pageRank]]'s. Labels
+    * With one block there is no exchange: each round counts the votes
+    * in one table and every node takes its best label from it, all
+    * rounds inside one task that reads the vertex block once, so it is
+    * not pinned. All rounds run in one job either way; `pinEvery` is
+    * [[pageRank]]'s, except that with one block a lost result block
+    * recomputes the one task from the edges. Labels
     * never grow (they are node ids), so there is no overflow ladder to
     * manage — this runs at any node count.
     *
@@ -715,56 +840,32 @@ object Graphs {
     require(iterations >= 1, "iterations must be >= 1")
     require(pinEvery >= 1, "pinEvery must be >= 1")
     // every node has >= 1 neighbour, so every node gets a vote each round
-    val (blk, blkPins) = Pins.pinRdd(blocks(edges, srcCol, dstCol, None, undirected = true))
-    val parts = blk.getNumPartitions
-    def beats(c: Long, l: Long, bestC: Long, bestL: Long): Boolean =
-      c > bestC || (c == bestC && l < bestL)
-    var labels = blk.map(_.ids)
-    var pins = blkPins
-    for (i <- 1 to iterations) {
-      val votes = blk.zipPartitions(labels) { (bs, ls) =>
-        val (b, l) = (bs.next(), ls.next())
-        val counts = Array.fill(parts)(new LongTable(2, 1, b.nbrs.length / parts + 16))
-        for (v <- 0 until b.size; j <- b.offs(v) until b.offs(v + 1)) {
-          val t = b.nbrs(j)
-          val m = counts(Math.floorMod(31 * java.lang.Long.hashCode(t) +
-            java.lang.Long.hashCode(l(v)), parts))
-          m.add(0, m.slot(t, l(v)), 1L)
-        }
-        posted(counts)
+    val built = blocks(edges, srcCol, dstCol, None, undirected = true)
+    val parts = built.getNumPartitions
+    val (out, held) = if (parts == 1) {
+      val labelled = built.map { b =>
+        var l = b.ids
+        for (_ <- 1 to iterations) l = adopt(b, vote(b, l, 1))
+        (b.ids, l)
       }
-      // (node, label) counts, then each node's best (count, label) here
-      val bests = shuffled(votes, parts).mapPartitions { recs =>
-        val counts = new LongTable(2, 1, 64)
-        recs.foreach { case Array(ts, ls, cs) =>
-          for (j <- ts.indices) counts.add(0, counts.slot(ts(j), ls(j)), cs(j))
+      (inTask(labelled, "labelPropagation", s"$iterations rounds"), Set.empty[Int])
+    } else {
+      val (blk, blkPins) = Pins.pinRdd(built)
+      var labels = blk.map(_.ids)
+      var pins = blkPins
+      for (i <- 1 to iterations) {
+        val votes = blk.zipPartitions(labels)((bs, ls) => vote(bs.next(), ls.next(), parts))
+        val bests = shuffled(votes, parts).mapPartitions(elect(_, parts))
+        val next = blk.zipPartitions(shuffled(bests, parts)) { (bs, recs) =>
+          Iterator(adopt(bs.next(), recs))
         }
-        val best = Array.fill(parts)(new LongTable(1, 2, counts.size / parts + 16))
-        for (s <- 0 until counts.size) {
-          val (t, l, c) = (counts.key(s), counts.key(s, 1), counts.value(0, s))
-          val m = best(owner(t, parts))
-          val x = m.slot(t)
-          if (beats(c, l, m.value(0, x), m.value(1, x))) { m.set(0, x, c); m.set(1, x, l) }
-        }
-        posted(best)
+        val (l, ids) = pinRound(next, i, iterations, pinEvery)
+        labels = l
+        pins ++= ids
       }
-      val next = blk.zipPartitions(shuffled(bests, parts)) { (bs, recs) =>
-        val b = bs.next()
-        val (bestC, bestL) = (new Array[Long](b.size), new Array[Long](b.size))
-        recs.foreach { case Array(ts, cs, ls) =>
-          for (j <- ts.indices) {
-            val v = b.index.find(ts(j))
-            if (beats(cs(j), ls(j), bestC(v), bestL(v))) { bestC(v) = cs(j); bestL(v) = ls(j) }
-          }
-        }
-        Iterator(bestL)
-      }
-      val (l, ids) = pinRound(next, i, iterations, pinEvery)
-      labels = l
-      pins ++= ids
+      (blk.zipPartitions(labels)((bs, ls) => Iterator((bs.next().ids, ls.next()))), pins)
     }
-    val out = blk.zipPartitions(labels)((bs, ls) => Iterator((bs.next().ids, ls.next())))
-    result(edges, srcCol, dstCol, out, StructField("label", LongType), pins)
+    result(edges, srcCol, dstCol, out, StructField("label", LongType), held)
   }
 
   /** Fixed-iteration HITS (Kleinberg 1999, "Authoritative sources in

@@ -531,17 +531,24 @@ class GraphsSpec extends SparkSpec {
   }
 
   /** Each operator's name and sorted rows on weighted edges `e` over
-    * `partitions` vertex blocks.
+    * `partitions` vertex blocks. One block must run the rounds inside
+    * its one task and several must not, so a comparison of the two is
+    * one of the two round paths.
     */
   private def rowsAt(partitions: Int, e: Seq[(Long, Long, Long)],
       seeds: Seq[Long]): Seq[(String, Seq[(Long, Long)])] = {
     val s = blocksAt(partitions)
     val df = s.createDataFrame(e).toDF("src", "dst", "w")
     operators(df, s.createDataFrame(seeds.map(Tuple1(_))).toDF("s")).map { case (name, run) =>
-      val r = run()
-      assert(r.rdd.getNumPartitions == partitions)
-      val rows = r.as[(Long, Long)].collect().toSeq.sorted
-      Graphs.unpin(r)
+      var rows = Seq.empty[(Long, Long)]
+      val (_, _, _, names) = jobsOf {
+        val r = run()
+        assert(r.rdd.getNumPartitions == partitions)
+        rows = r.as[(Long, Long)].collect().toSeq.sorted
+        Graphs.unpin(r)
+      }
+      assert(names.exists(_.startsWith(s"graph rounds in one task: $name, ")) == (partitions == 1),
+        s"$name at $partitions partitions ran $names")
       (name, rows)
     }
   }
@@ -618,6 +625,36 @@ class GraphsSpec extends SparkSpec {
       assert(written.isEmpty, s"$name wrote shuffle records: $written")
       assert(names.exists(_.startsWith("graph blocks: 1, edge estimate ")), s"$name: $names")
     }
+  }
+
+  test("one block: all rounds run inside one task, with no job per round") {
+    val rnd = new scala.util.Random(3)
+    val raw = (1 to 400).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong, 1L + rnd.nextInt(4)))
+    val e = raw.map(t => (t._1, t._2)).toDF("src", "dst")
+    def inOneTask(what: String, maxJobs: Int)(body: => Unit): Unit = {
+      val (jobs, stages, _, names) = jobsOf(body)
+      assert(jobs <= maxJobs, s"$what ran $jobs jobs")
+      assert(stages == jobs, s"$what ran $stages stages in $jobs jobs")
+      assert(names.exists(_.startsWith("graph rounds in one task: ")), s"$what ran $names")
+    }
+    // setup job (vertex block + node or seed count), rounds job, the caller's collect
+    inOneTask("pageRank(8)", 3)(Graphs.pageRank(e, "src", "dst", 8).collect())
+    inOneTask("weightedPageRank(8)", 3)(
+      Graphs.weightedPageRank(raw.toDF("src", "dst", "w"), "src", "dst", "w", 8).collect())
+    inOneTask("personalizedPageRank(8)", 3)(Graphs.personalizedPageRank(
+      e, "src", "dst", Seq(1L, 2L).toDF("s"), "s", 8).collect())
+    // rounds job, the caller's collect
+    inOneTask("labelPropagation(5)", 2)(Graphs.labelPropagation(e, "src", "dst", 5).collect())
+    // K5 with a 4-node path hanging off it: 5 peel rounds at k=2, and
+    // still the rounds job and the caller's collect
+    val core = for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)
+    val path = Seq((5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
+    inOneTask("kCore", 2) {
+      val got = Graphs.kCore((core ++ path).toDF("src", "dst"), "src", "dst", 2)
+        .as[(Long, Long)].collect().toMap
+      assert(got == (1L to 5L).map(_ -> 4L).toMap)
+    }
+    Curation.releaseAllPins(spark)
   }
 
   test("the block count: the size estimate over the target size, within [1, shuffle partitions]") {

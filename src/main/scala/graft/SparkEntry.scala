@@ -306,9 +306,11 @@ object SparkEntry {
     * StreamingQueryListenerBus on the shared LiveListenerBus for the
     * context lifetime — hundreds of gate invocations per bench/Verify
     * JVM would each add a bus that processes every subsequent event.
+    * The memo holds its parents weakly (a child does not reference its
+    * parent), so a parent nothing else uses is collected with its child.
     */
-  private val streamSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  private val streamSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
 
   /** Child session for the stream gates: own SQLConf (stream-sized
     * shuffle partitions — see the sizing note in [[runStreamGate]]),
@@ -318,7 +320,7 @@ object SparkEntry {
     * memory-sink table registers in this session; the returned gate
     * frame carries it.
     */
-  private def streamSession(s: SparkSession): SparkSession =
+  private[graft] def streamSession(s: SparkSession): SparkSession =
     streamSessions.computeIfAbsent(s, parent => {
     val ss = parent.newSession()
     ss.conf.set("spark.sql.shuffle.partitions",

@@ -77,8 +77,12 @@ class Container(
   def count(query: String = null, date: String = "~"): Long =
     find(query = query, date = date).count()
 
-  /** Distinct values of one field; array fields are flattened first
-    * (reference: sqlalchemy.py:706-721).
+  /** Distinct values of one field, sorted; array fields are flattened
+    * first (reference: sqlalchemy.py:706-721).
+    *
+    * The distinct values are bound for the driver, so they are sorted
+    * within one partition: a global `orderBy` would add a job that
+    * samples them for a range partitioning nobody needs.
     */
   def distinct(field: String, query: String = null, date: String = "~"): DataFrame = {
     val base = find(query = query, date = date)
@@ -86,7 +90,7 @@ class Container(
     val vals =
       if (isArray) base.select(explode(col(field)).as(field))
       else base.select(col(field))
-    vals.distinct().orderBy(col(field))
+    vals.distinct().coalesce(1).sortWithinPartitions(col(field))
   }
 
   /** Max value of a field across ALL history (reference:

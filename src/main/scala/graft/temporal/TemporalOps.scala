@@ -2,7 +2,7 @@ package graft.temporal
 
 import graft.model.Meta
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,9 +13,17 @@ import org.apache.spark.sql.types._
   * `graft.temporal.TemporalOps._` and call these on any DataFrame
   * carrying `_oid`/`_start`/`_end` (epoch-second Doubles).
   *
-  * All operators are window/groupBy formulations: one shuffle on
-  * `_oid` (or none, when AQE reuses the partitioning), no driver-side
-  * iteration — the pandas per-row masks become distributed plans.
+  * Each read is answered from small partial aggregates merged into one
+  * small result, not from a per-row join or a sort it does not need:
+  *   - grid reads (`history`, `persistentOidCounts`) map each version to
+  *     indexes into the sorted date grid, sum a per-partition
+  *     `Array[Long](G + 1)` of +1/−1 steps in one job, and prefix-sum
+  *     the ≤ G counts on the driver into a local DataFrame;
+  *   - per-oid picks (`firstVersion`, `lastVersion`,
+  *     `lastVersionsWithAge`) are one `groupBy(_oid)` aggregate, so
+  *     partial aggregation shrinks the rows before the one shuffle.
+  * Operators whose output is a per-row rank or running value
+  * (`oneVersion(i)` past the ends, `lastChain`) keep their windows.
   */
 object TemporalOps {
 
@@ -35,40 +43,37 @@ object TemporalOps {
     private def aliveAt(d: Double): Column =
       col(Meta.START) <= d && (col(Meta.END) > d || col(Meta.END).isNull)
 
-    /** Alive-object count per date in `dates` → (date, n).
+    /** Alive-object count per date in `dates` → (date, n), sorted by
+      * date; dates where nothing is alive are absent, and a date listed
+      * k times counts k× (the reference's grid: result.py:277-298).
       *
-      * Formulated as a range-join against the date grid. The grid is
-      * tiny (~300 points, reference: result.py:277-298) so Spark
-      * broadcasts it: each partition of `df` streams once past all grid
-      * points — no shuffle of the fact table at all.
+      * A sweep, not a join: each version is alive at the grid indexes
+      * `[s, e)`, where `s` is the first grid date ≥ `_start` and `e` the
+      * first ≥ `_end` (G for an open `_end`). One job sums the +1 at `s`
+      * and −1 at `e` of every version into one `Array[Long](G + 1)`; the
+      * driver prefix-sums it. Dates compare as Spark doubles (−0.0 =
+      * 0.0, NaN above every number), and a null `_start` is never alive.
       */
     def history(dates: Seq[Double]): DataFrame = {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val grid = broadcast(dates.toDF("date"))
-      df.join(
-          grid,
-          col(Meta.START) <= col("date") &&
-            (col(Meta.END) > col("date") || col(Meta.END).isNull))
-        .groupBy(col("date"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("date")
+      val grid = new Grid(dates)
+      val steps = sweep(
+        df.select(col(Meta.START).cast(DoubleType), col(Meta.END).cast(DoubleType)), grid.points)
+      grid.counts(df.sparkSession, steps, perListing = true)
     }
 
     /** Count of distinct oids ever seen up to each grid date
-      * (reference: result.py:324-337 `persistent_oid_counts`).
-      * `min(_start)` per oid, then a cumulative count over the grid.
+      * (reference: result.py:324-337 `persistent_oid_counts`), sorted by
+      * date; dates with no oid yet are absent, and a date listed twice
+      * counts once. `min(_start)` per non-null `_oid`, then the
+      * [[history]] sweep over those first starts with no end.
       */
     def persistentOidCounts(dates: Seq[Double]): DataFrame = {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val firstSeen = df.groupBy(Meta.OID).agg(min(Meta.START).as("first_start"))
-      val grid = broadcast(dates.toDF("date"))
-      firstSeen
-        .join(grid, col("first_start") <= col("date"))
-        .groupBy("date")
-        .agg(countDistinct(Meta.OID).as("n"))
-        .orderBy("date")
+      val grid = new Grid(dates)
+      val firstSeen = df.filter(col(Meta.OID).isNotNull)
+        .groupBy(Meta.OID).agg(min(col(Meta.START).cast(DoubleType)).as("_first_start"))
+        .select("_first_start")
+      val steps = sweep(firstSeen, grid.points)
+      grid.counts(df.sparkSession, steps, perListing = false)
     }
 
     /** Change feed since `t` — the CDC emission an SCD2 store implies
@@ -107,30 +112,57 @@ object TemporalOps {
     }
 
     /** Latest version per oid, plus `age = min(cutoff, _end) - first
-      * _start of the oid` (reference: result.py:339-392).
+      * _start of the oid` (reference: result.py:339-392). One
+      * `groupBy(_oid)`: `max_by` of the version by `_start` and
+      * `min(_start)`. The tie rule is [[oneVersion]]'s.
       */
-    def lastVersionsWithAge(cutoff: Double): DataFrame = {
-      val w = oidWindow.orderBy(col(Meta.START).desc)
-      df.withColumn("_rn", row_number().over(w))
-        .withColumn("_first_start", min(Meta.START).over(oidWindow))
-        .filter(col("_rn") === 1)
+    def lastVersionsWithAge(cutoff: Double): DataFrame =
+      pick(latest = true, min(Meta.START).as("_first_start"))
         .withColumn(
           "age",
           least(coalesce(col(Meta.END), lit(cutoff)), lit(cutoff)) - col("_first_start"))
-        .drop("_rn", "_first_start")
-    }
+        .drop("_first_start")
 
     /** i-th version per oid by `_start` order; negative i counts from
       * the end (reference: result.py:429-452 `one_version`).
+      *
+      * The first (`i = 0`) and last (`i = -1`) versions are one
+      * `groupBy(_oid)` with `min_by`/`max_by` of the version by
+      * `_start`, so no window sorts the versions. A null `_start` ranks
+      * first, as in an ascending sort. Other `i` rank with
+      * `row_number`, since the rank is the output.
+      *
+      * Ties: versions of one oid that share the picked `_start` are not
+      * ordered, and which of them is returned may change with the
+      * partitioning. Every SCD2 chain has one version per `_start`, so
+      * a store's output never depends on it.
       */
-    def oneVersion(i: Int): DataFrame = {
-      val w =
-        if (i >= 0) oidWindow.orderBy(col(Meta.START).asc)
-        else oidWindow.orderBy(col(Meta.START).desc)
-      val target = if (i >= 0) i + 1 else -i
-      df.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === target)
-        .drop("_rn")
+    def oneVersion(i: Int): DataFrame =
+      if (i == 0 || i == -1) pick(latest = i == -1)
+      else {
+        val w =
+          if (i >= 0) oidWindow.orderBy(col(Meta.START).asc)
+          else oidWindow.orderBy(col(Meta.START).desc)
+        val target = if (i >= 0) i + 1 else -i
+        df.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") === target)
+          .drop("_rn")
+      }
+
+    /** The first or latest version of each oid by `_start`, as `df`'s
+      * columns followed by `extra` aggregates of the oid's versions.
+      */
+    private def pick(latest: Boolean, extra: Column*): DataFrame = {
+      val rest = df.columns.filterNot(_ == Meta.OID)
+      val version = struct(rest.map(col): _*)
+      // a struct key ranks a null _start below every number instead of
+      // dropping it, as the ascending sort did
+      val key = struct(col(Meta.START))
+      val picked = (if (latest) max_by(version, key) else min_by(version, key)).as("_v")
+      val grouped = df.groupBy(col(Meta.OID)).agg(picked, extra: _*)
+      grouped.select(
+        df.columns.map(c => if (c == Meta.OID) col(c) else col("_v").getField(c).as(c)) ++
+          grouped.columns.drop(2).map(col): _*)
     }
 
     def firstVersion: DataFrame = oneVersion(0)
@@ -188,6 +220,74 @@ object TemporalOps {
       df.groupByKey(r => r.getAs[Any](Meta.OID).toString)
         .flatMapGroups((_, it) => f(it.toSeq).iterator)
     }
+  }
+
+  /** `dates` as the sorted, distinct grid the sweeps index into, with
+    * the number of times each point is listed. Points follow Spark's
+    * double order: −0.0 folds into 0.0 and NaN sorts above every number
+    * (`java.lang.Double.compare` order once −0.0 is gone).
+    */
+  private final class Grid(dates: Seq[Double]) {
+    private val sorted = dates.map(unsigned).toArray.sorted(Ordering.Double.TotalOrdering)
+    // where each run of equal points starts (compare, unlike ==, equates NaNs)
+    private val starts = sorted.indices
+      .filter(j => j == 0 || java.lang.Double.compare(sorted(j), sorted(j - 1)) != 0)
+    val points: Array[Double] = starts.map(sorted(_)).toArray
+    private val listed = starts.zip(starts.drop(1) :+ sorted.length).map { case (a, b) => (b - a).toLong }
+
+    /** One (date, n) row per point whose running sum of `steps` is
+      * positive, n being that sum, times the point's listings if
+      * `perListing`; a local DataFrame.
+      */
+    def counts(spark: SparkSession, steps: Array[Long], perListing: Boolean): DataFrame = {
+      val rows = new java.util.ArrayList[Row]()
+      var alive = 0L
+      for (j <- points.indices) {
+        alive += steps(j)
+        if (alive > 0) rows.add(Row(points(j), if (perListing) alive * listed(j) else alive))
+      }
+      spark.createDataFrame(rows, HistorySchema)
+    }
+  }
+
+  private val HistorySchema = StructType(Seq(
+    StructField("date", DoubleType, nullable = false),
+    StructField("n", LongType, nullable = false)))
+
+  private def unsigned(v: Double): Double = if (v == 0.0) 0.0 else v
+
+  /** First grid index whose point is ≥ `v` in Spark's double order. */
+  private def indexOf(points: Array[Double], v: Double): Int = {
+    val at = java.util.Arrays.binarySearch(points, unsigned(v))
+    if (at >= 0) at else -at - 1
+  }
+
+  /** The +1/−1 steps of `bounds` — (start, end) doubles, or a start
+    * alone for a version that never ends — summed over all partitions in
+    * one job: +1 at the first grid index ≥ start, −1 at the first ≥ end.
+    * A null start adds nothing; a null end never closes.
+    */
+  private def sweep(bounds: DataFrame, points: Array[Double]): Array[Long] = {
+    val g = points.length
+    if (g == 0) return Array(0L)
+    val hasEnd = bounds.schema.length > 1
+    bounds.queryExecution.toRdd
+      .mapPartitions { rows =>
+        val steps = new Array[Long](g + 1)
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val s = indexOf(points, r.getDouble(0))
+            val e = if (!hasEnd || r.isNullAt(1)) g else indexOf(points, r.getDouble(1))
+            if (s < e) { steps(s) += 1; steps(e) -= 1 }
+          }
+        }
+        Iterator.single(steps)
+      }
+      .fold(new Array[Long](g + 1)) { (a, b) =>
+        var j = 0
+        while (j <= g) { a(j) += b(j); j += 1 }
+        a
+      }
   }
 
   /** A query result with its temporal bounds remembered — asking for a

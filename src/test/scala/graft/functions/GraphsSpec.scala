@@ -1,12 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import scala.jdk.CollectionConverters._
 
 /** Integer-nano PageRank: hand-checkable invariants, a naive
   * driver-side reference replay (the oracle's algebra), truncating-
@@ -425,50 +421,6 @@ class GraphsSpec extends SparkSpec {
       s"only the final hub+auth raw pins may survive, got ${htPins.size}")
     Graphs.unpin(ht)
     assert(htPins.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)))
-  }
-
-  /** Jobs and submitted stages of `body`, the shuffle records each of
-    * its map tasks wrote and the names of the RDDs its stages ran,
-    * counted by a listener that keeps only events of a job group set
-    * for the call.
-    */
-  private def jobsOf(body: => Unit): (Int, Int, Seq[Long], Set[String]) = {
-    val sc = spark.sparkContext
-    val group = s"graphs-spec-${java.util.UUID.randomUUID()}"
-    def ours(p: java.util.Properties) =
-      p != null && p.getProperty("spark.jobGroup.id") == group
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val ended = new java.util.concurrent.atomic.AtomicInteger
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val groupJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val written = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val names = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) { groupJobs.add(e.jobId); started.incrementAndGet() }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (groupJobs.contains(e.jobId)) ended.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) {
-          stages.add(e.stageInfo.stageId)
-          e.stageInfo.rddInfos.foreach(r => names.add(r.name))
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null &&
-          e.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
-          written.add(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "graphs job count", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      // the bus is asynchronous: wait until every counted job has ended
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while ((started.get == 0 || ended.get < started.get) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(started.get > 0 && ended.get == started.get, "listener bus did not drain")
-      (started.get, stages.size, written.asScala.toSeq, names.asScala.toSet)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("fixed rounds run as stages of one job: job and stage counts per call") {

@@ -2,7 +2,9 @@ package graft.temporal
 
 import graft.SparkSpec
 import graft.temporal.TemporalOps._
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.store.Container
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,8 +20,10 @@ class TemporalOpsSpec extends SparkSpec {
   /** ~40 oids × 1..8 versions; consecutive versions share boundaries;
     * ~25% of oids end with an open version. Deterministic (seed 7).
     */
-  private lazy val chains: Seq[V] = {
-    val rng = new Random(7)
+  private lazy val chains: Seq[V] = chainsOf(7)
+
+  private def chainsOf(seed: Long): Seq[V] = {
+    val rng = new Random(seed)
     (1L to 40L).flatMap { oid =>
       val n = 1 + rng.nextInt(8)
       var t = 100.0 + rng.nextInt(50)
@@ -33,13 +37,20 @@ class TemporalOpsSpec extends SparkSpec {
     }
   }
 
-  private lazy val df: DataFrame = {
-    val rows = chains.map(v => Row(v.oid, v.start, v.end.map(Double.box).orNull, v.lala))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows),
-      StructType(Seq(
-        StructField("_oid", LongType), StructField("_start", DoubleType),
-        StructField("_end", DoubleType), StructField("lala", IntegerType))))
+  private val schema = StructType(Seq(
+    StructField("_oid", LongType), StructField("_start", DoubleType),
+    StructField("_end", DoubleType), StructField("lala", IntegerType)))
+
+  private def rowOf(v: V): Row = Row(v.oid, v.start, v.end.map(Double.box).orNull, v.lala)
+
+  private lazy val df: DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(chains.map(rowOf)), schema)
+
+  /** A session of the shared context at `partitions` shuffle partitions. */
+  private def sessionAt(partitions: Int): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    s
   }
 
   test("onDate matches the <=/</open-interval oracle") {
@@ -234,5 +245,121 @@ class TemporalOpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TemporalOps.rollingAgg(ev, Seq("k"), "ts", 60L, Map("ts" -> count(lit(1))))
     }
+  }
+
+  // ---------------------------------------------------------------- sweeps
+
+  /** `history` as the broadcast range join it was before the sweep. */
+  private def historyByJoin(v: DataFrame, dates: Seq[Double]): DataFrame = {
+    import v.sparkSession.implicits._
+    v.join(
+        broadcast(dates.toDF("date")),
+        col("_start") <= col("date") && (col("_end") > col("date") || col("_end").isNull))
+      .groupBy(col("date"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy("date")
+  }
+
+  /** `persistentOidCounts` as the join it was before the sweep. */
+  private def persistentByJoin(v: DataFrame, dates: Seq[Double]): DataFrame = {
+    import v.sparkSession.implicits._
+    v.groupBy("_oid").agg(min("_start").as("first_start"))
+      .join(broadcast(dates.toDF("date")), col("first_start") <= col("date"))
+      .groupBy("date")
+      .agg(countDistinct("_oid").as("n"))
+      .orderBy("date")
+  }
+
+  /** Rows in order, dates by their bits so −0.0 and 0.0 differ. */
+  private def bitsOf(d: DataFrame): Seq[(Long, Long)] =
+    d.collect().toSeq.map(r => (java.lang.Double.doubleToLongBits(r.getDouble(0)), r.getLong(1)))
+
+  private val GridSchema = StructType(Seq(
+    StructField("date", DoubleType, nullable = false),
+    StructField("n", LongType, nullable = false)))
+
+  test("history and persistentOidCounts match the join formulas at shuffle partitions 1 and 7") {
+    // rows the random chains lack: a NaN end, a NaN start, −0.0 bounds,
+    // a null start and a null oid
+    val odd = Seq(
+      Row(500L, 130.0, Double.box(Double.NaN), 1),
+      Row(501L, Double.NaN, null, 2),
+      Row(502L, -0.0, Double.box(150.0), 3),
+      Row(503L, -0.0, Double.box(0.0), 4),
+      Row(504L, null, null, 5),
+      Row(null, 120.0, null, 6),
+      Row(null, 140.0, Double.box(260.0), 7))
+    for (seed <- Seq(11L, 12L)) {
+      val vs = chainsOf(seed)
+      val bounds = vs.flatMap(v => v.start +: v.end.toSeq).distinct
+      val hits = new Random(seed).shuffle(bounds).take(12)
+      val grids = Seq(
+        "exact bounds" -> hits.sorted,
+        "unsorted with duplicates" -> (hits ++ hits.take(4)),
+        "empty" -> Seq.empty[Double],
+        "NaN and signed zeros" -> Seq(Double.NaN, 300.0, 0.0, -0.0, 150.0, Double.NaN, 130.0),
+        "wide" -> (0 to 30).map(_ * 25.0))
+      for (partitions <- Seq(1, 7)) {
+        val s = sessionAt(partitions)
+        val v = s.createDataFrame(s.sparkContext.parallelize(vs.map(rowOf) ++ odd, 3), schema)
+        for ((name, grid) <- grids) {
+          val what = s"seed $seed, $name grid, $partitions partitions"
+          val h = v.history(grid)
+          assert(h.schema == GridSchema, what)
+          assert(bitsOf(h) == bitsOf(historyByJoin(v, grid)), s"history, $what")
+          val p = v.persistentOidCounts(grid)
+          assert(p.schema == GridSchema, what)
+          assert(bitsOf(p) == bitsOf(persistentByJoin(v, grid)), s"persistentOidCounts, $what")
+        }
+      }
+    }
+  }
+
+  test("read shapes: history in one job with no nested-loop join, distinct in two, picks with no Window") {
+    val grid = (0 until 26).map(w => 100.0 + 20.0 * w)
+    var hist: DataFrame = null
+    val (historyJobs, _, _, _) = jobsOf { hist = df.history(grid); hist.collect() }
+    assert(historyJobs <= 1, s"history ran $historyJobs jobs")
+    val histPlan = hist.queryExecution.executedPlan.toString
+    assert(!histPlan.contains("BroadcastNestedLoopJoin"), histPlan)
+
+    val c = new Container(spark, "shapes", df)
+    val (distinctJobs, _, _, _) = jobsOf(c.distinct("lala").collect())
+    assert(distinctJobs <= 2, s"Container.distinct ran $distinctJobs jobs")
+    assert(c.distinct("lala").collect().map(_.getInt(0)).toSeq == chains.map(_.lala).distinct.sorted)
+
+    for ((name, picked) <- Seq(
+        "lastVersion" -> df.lastVersion,
+        "firstVersion" -> df.firstVersion,
+        "lastVersionsWithAge" -> df.lastVersionsWithAge(400.0))) {
+      val plan = picked.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window"), s"$name plans a window:\n$plan")
+    }
+  }
+
+  test("tie-free picks give identical rows at shuffle partitions 1 and 7, equal to the row_number picks") {
+    assert(chains.groupBy(_.oid).values.forall(vs => vs.map(_.start).distinct.size == vs.size),
+      "fixture has tied starts")
+    // a null _start sorts first ascending and last descending
+    val nullStarts = Seq(Row(900L, null, Double.box(5.0), 1), Row(900L, 5.0, null, 2), Row(901L, null, null, 3))
+    def byRank(v: DataFrame, first: Boolean): DataFrame = {
+      val w = Window.partitionBy("_oid")
+        .orderBy(if (first) col("_start").asc else col("_start").desc)
+      v.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+    }
+    def rowsAt(partitions: Int): Seq[Seq[Row]] = {
+      val s = sessionAt(partitions)
+      val v = s.createDataFrame(s.sparkContext.parallelize(chains.map(rowOf) ++ nullStarts, 5), schema)
+      Seq(
+        v.firstVersion, byRank(v, first = true),
+        v.lastVersion, byRank(v, first = false),
+        v.lastVersionsWithAge(400.0))
+        .map(_.orderBy("_oid").collect().toSeq)
+    }
+    val one = rowsAt(1)
+    assert(one == rowsAt(7))
+    assert(one(0) == one(1), "firstVersion differs from the row_number pick")
+    assert(one(2) == one(3), "lastVersion differs from the row_number pick")
+    assert(one(4).map(_.toSeq.dropRight(1)) == one(3).map(_.toSeq), "lastVersionsWithAge columns")
   }
 }
